@@ -12,16 +12,31 @@ import org.apache.spark.sql.SparkSession
   * entries in "queries". A warm-up action runs first so session/
   * codegen startup isn't billed to the first query.
   *
-  * Per-query floor, profiled (RunOne, sf0.1): a trivial entry costs
-  * ~0.15-0.2 s warm and a projection-heavy one ~0.25-0.3 s — the gap
-  * between them (the contract's total sort + canonical formatting) is
-  * ~50 ms, so the floor is Spark fixed overhead (planning, 2-3 job
-  * launches, AQE re-plan), not formatter cost. First execution of a
-  * wide projection adds 1-2 s of janino/JIT codegen; the interleaved
-  * min-of-N below absorbs it (pass 2 hits the codegen cache), so
-  * anomalously slow official entries (e.g. qf5 1.74 s in r6) indicate
-  * driver-host contention, not plan cost. Data-dominated behavior is
-  * evidenced separately by ScaleBench (BENCH_SCALE.json).  */
+  * Per-query floor, traced (`perfbench/run.py --workload
+  * sql_interactive --trace 1`: seven small contract queries at sf0.01,
+  * two task threads on 4 vCPUs, medians over traced passes). The floor
+  * is Spark jobs and the driver work around them, not planning:
+  *  - Without the single-partition route (plans.SmallQueryRoute) and
+  *    with Spark's 100-entry codegen cache, a pass of the seven took
+  *    ~1.6 s: 27 jobs of one task each (one per AQE query stage plus a
+  *    range-sampling job under every global ORDER BY) spanning 0.80 s,
+  *    0.60 s of driver residual (job submission, AQE re-planning
+  *    between stages, result handling) and 0.22 s of Catalyst
+  *    analysis, optimization and planning. Executors were busy 0.48 s.
+  *    Each pass also recompiled ~30 generated classes, which cost
+  *    ~2 s of JIT CPU on the other cores.
+  *  - With the route and GraftSession.CodegenCacheEntries the same
+  *    pass takes ~0.9 s: 15 jobs spanning 0.39 s, 0.35 s of residual,
+  *    no recompilation and 1.0 s of JIT CPU.
+  * A query the route does not take (joins, inputs past one advisory
+  * partition) keeps 3-8 jobs. The first execution of a wide projection
+  * adds 1-2 s of Janino/JIT codegen; the interleaved min-of-N below
+  * absorbs it, since the codegen cache holds the inventory's generated
+  * classes and pass 2 recompiles only the few that embed per-call
+  * values. Anomalously slow official entries (e.g. qf5 1.74 s in r6)
+  * therefore indicate driver-host contention, not plan cost.
+  * Data-dominated behavior is evidenced separately by ScaleBench
+  * (BENCH_SCALE.json).  */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -542,25 +542,17 @@ object EngineOps {
     new java.util.WeakHashMap[SparkSession,
       java.util.concurrent.ConcurrentHashMap[String, (String, String, Set[String])]]())
   private def listFilesUnder(path: String): Set[String] = {
-    import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(root)) return Set.empty
-    val it = java.nio.file.Files.walk(root)
-    try it.iterator().asScala
-      .filter(java.nio.file.Files.isRegularFile(_))
-      .map(p => root.relativize(p).toString).toSet
-    finally it.close()
+    if (!java.nio.file.Files.exists(root)) Set.empty
+    else walkTree(root)(_.filter(java.nio.file.Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString).toSet)
   }
   private def resetToBaseline(path: String, baseline: Set[String]): Unit = {
-    import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(root)) return
-    val it = java.nio.file.Files.walk(root)
-    try it.iterator().asScala
-      .filter(java.nio.file.Files.isRegularFile(_))
-      .filterNot(p => baseline(root.relativize(p).toString))
-      .toSeq.foreach(java.nio.file.Files.delete(_))
-    finally it.close()
+    if (java.nio.file.Files.exists(root))
+      walkTree(root)(_.filter(java.nio.file.Files.isRegularFile(_))
+        .filterNot(p => baseline(root.relativize(p).toString)).toSeq)
+        .foreach(java.nio.file.Files.delete(_))
   }
   private def ensureIvfIncr(spark: SparkSession, dir: String)
       : (String, String, Set[String]) =
@@ -725,15 +717,11 @@ object EngineOps {
     // unbounded blob (the >1-file split of a genuinely oversized cell
     // is spec-proven; at bench scale every cell fits one bin)
     val maxFileBytes = {
-      import scala.jdk.CollectionConverters._
       val root = java.nio.file.Paths.get(comp)
-      val it = java.nio.file.Files.walk(root)
-      try it.iterator().asScala
-        .filter(p => java.nio.file.Files.isRegularFile(p) &&
+      walkTree(root)(_.filter(p => java.nio.file.Files.isRegularFile(p) &&
           p.toString.endsWith(".parquet") &&
           !root.relativize(p).toString.startsWith("_codebook"))
-        .map(java.nio.file.Files.size(_)).maxOption.getOrElse(0L)
-      finally it.close()
+        .map(java.nio.file.Files.size(_)).maxOption.getOrElse(0L))
     }
     // topk(comp) probes the MUTATED layout — recomputed every pass;
     // the full-layout reference is the cached expectation scalar
@@ -2168,7 +2156,6 @@ object EngineOps {
 
   private def codecRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import scala.jdk.CollectionConverters._
     val tmp = java.nio.file.Files.createTempDirectory("graft_codec")
     try {
       val slice = eventsSlice(spark, dir)
@@ -2177,9 +2164,9 @@ object EngineOps {
         slice.write.option("compression", codec).mode("overwrite").parquet(path)
         val (n, h, s) = checksum(spark.read.parquet(path))
         (codec, n, h, s,
-          java.nio.file.Files.walk(java.nio.file.Paths.get(path)).iterator().asScala
+          walkTree(java.nio.file.Paths.get(path))(_
             .filter(p => p.toString.endsWith(".parquet"))
-            .map(java.nio.file.Files.size).sum / 1024)
+            .map(java.nio.file.Files.size).sum) / 1024)
       }
       rows.toDF("codec", "n_rows", "row_hash", "sum_v", "size_kb")
         .orderBy(col("codec"))
@@ -4158,23 +4145,28 @@ object EngineOps {
     }
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
+  /** `f` over every path under `root`, `root` first and each
+    * directory before its contents; the walk's directory handles are
+    * closed when `f` returns, so `f` must not let the iterator escape. */
+  private def walkTree[A](root: java.nio.file.Path)(
+      f: Iterator[java.nio.file.Path] => A): A = {
     import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(p).iterator().asScala.toSeq
-      .sortBy(-_.getNameCount)
-      .foreach(f => java.nio.file.Files.deleteIfExists(f))
+    val walk = java.nio.file.Files.walk(root)
+    try f(walk.iterator().asScala) finally walk.close()
   }
 
+  private def deleteRecursively(p: java.nio.file.Path): Unit =
+    walkTree(p)(_.toSeq).sortBy(-_.getNameCount)
+      .foreach(f => java.nio.file.Files.deleteIfExists(f))
+
   private def copyRecursively(src: java.nio.file.Path,
-      dst: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(src).iterator().asScala.foreach { f =>
+      dst: java.nio.file.Path): Unit =
+    walkTree(src)(_.foreach { f =>
       val to = dst.resolve(src.relativize(f))
       if (java.nio.file.Files.isDirectory(f))
         java.nio.file.Files.createDirectories(to): Unit
       else java.nio.file.Files.copy(f, to): Unit
-    }
-  }
+    })
 
   /** Hardlink tree copy (byte-copy fallback when the filesystem
     * refuses links). Safe for staging IMMUTABLE-file layouts: parquet
@@ -4182,9 +4174,8 @@ object EngineOps {
     * linked tree (e.g. compaction) writes new files and unlinks old
     * names, which never touches the source inodes. */
   private def linkRecursively(src: java.nio.file.Path,
-      dst: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(src).iterator().asScala.foreach { f =>
+      dst: java.nio.file.Path): Unit =
+    walkTree(src)(_.foreach { f =>
       val to = dst.resolve(src.relativize(f))
       if (java.nio.file.Files.isDirectory(f))
         java.nio.file.Files.createDirectories(to): Unit
@@ -4195,8 +4186,7 @@ object EngineOps {
                _: java.nio.file.FileSystemException =>
             java.nio.file.Files.copy(f, to): Unit
         }
-    }
-  }
+    })
 
   /** Count-min + Bloom sketches vs exact counts for probe users
     * (sketch family beside the HLL check; seeded, deterministic).

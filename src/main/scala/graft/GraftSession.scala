@@ -15,9 +15,29 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session time zone (oracle comparability);
   *  - broadcast threshold left at default 10 MB — all dimension
   *    tables (region/nation/customer/supplier/part) broadcast at
-  *    every tested SF.
+  *    every tested SF;
+  *  - a generated-code cache that holds the whole inventory's working
+  *    set ([[CodegenCacheEntries]]);
+  *  - the engine's extensions ([[graft.plans.GraftExtensions]]),
+  *    among them the single-partition route for small join-free
+  *    queries ([[graft.plans.SmallQueryRoute]]), whose size gate is
+  *    the advisory partition size below.
   */
 object GraftSession {
+
+  /** Entries of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, a static conf: the first
+    * session of the JVM fixes it). Spark's default of 100 is split over
+    * 4 cache segments of about 25 classes each, fewer than even the
+    * 7-query `sql_interactive` benchmark set generates: with it, every
+    * pass of that set recompiled 17-39 classes through Janino and then
+    * the JIT (one traced run, 11 passes). One pass over the whole
+    * inventory (all contract and engine entries, sf0.001) compiles
+    * 2784 classes into an unbounded cache and a second pass 35 (code
+    * that embeds per-call values, which no cache size helps), so the
+    * working set is ~2750 classes. 4096 keeps it with room for the
+    * segments' uneven split (~1024 each against ~690 expected). */
+  val CodegenCacheEntries = 4096
 
   /** `master` defaults to `local[cores]`. The LOCAL-ONLY AQE tunings
     * (1 MB advisory size, size-first coalescing — FloorLab-measured on
@@ -59,6 +79,7 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
     localTunings(resolvedMaster).foldLeft(common) {
       case (b, (k, v)) => b.config(k, v)

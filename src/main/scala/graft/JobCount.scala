@@ -7,10 +7,14 @@ package graft
   *   graft.JobCount.run(Seq("eng_pagerank", ...), sfDir)
   * High job counts are not automatically waste: AQE materializes one
   * job per query stage, so protocol entries legitimately run many —
-  * compare against the entry's known step structure. */
+  * compare against the entry's known step structure. Counts are read
+  * after the listener bus has drained, so every job of the entry is
+  * in them. */
 object JobCount {
-  def run(names: Seq[String], dir: String): Unit = {
+  /** Prints one census line per entry and returns (entry, jobs). */
+  def run(names: Seq[String], dir: String): Seq[(String, Int)] = {
     val spark = org.apache.spark.sql.SparkSession.active
+    val sc = spark.sparkContext
     val fns = SparkEntry.queries
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val stages = new java.util.concurrent.atomic.AtomicInteger
@@ -24,18 +28,18 @@ object JobCount {
         tasks.addAndGet(s.stageInfo.numTasks); ()
       }
     }
-    spark.sparkContext.addSparkListener(listener)
-    try names.foreach { n =>
+    sc.addSparkListener(listener)
+    try names.map { n =>
       // warm pass not counted
       fns(n)(spark, dir).write.format("noop").mode("overwrite").save()
-      Thread.sleep(300)
+      org.apache.spark.sql.graftshim.BusDrain.drain(sc)
       jobs.set(0); stages.set(0); tasks.set(0)
       val t0 = System.nanoTime()
       fns(n)(spark, dir).write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
+      org.apache.spark.sql.graftshim.BusDrain.drain(sc)
       println(f"[jobcount] $n%-28s ${dt}%7.3f s  jobs=${jobs.get}%3d stages=${stages.get}%3d tasks=${tasks.get}%5d")
-    } finally spark.sparkContext.removeSparkListener(listener)
-    println("JOBCOUNT DONE")
+      n -> jobs.get
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -13,11 +13,19 @@ import graft.expressions.{VecAggExpr, VecDotExpr}
   * (/root/reference/mlir_compiler/optimizer.py:24-71: fusion passes
   * run between parse and codegen). Registered programmatically by
   * GraftSession; a cluster deployment sets
-  * `spark.sql.extensions=graft.plans.GraftExtensions`. */
+  * `spark.sql.extensions=graft.plans.GraftExtensions`.
+  *
+  * [[SmallQueryRoute]] is the one physical rule: an AQE query-stage
+  * preparation rule that plans a small, join-free, layout-blind query
+  * whose result goes to the client or the noop sink as a
+  * single-partition plan (no hash shuffles to coalesce, no
+  * range-sampling job under its ORDER BY). Its guards and its size gate
+  * are documented there. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => VecDotRewrite)
     ext.injectResolutionRule(s => ChangeFeedRewrite(s))
+    ext.injectQueryStagePrepRule(s => SmallQueryRoute(s))
     ext.injectTableFunction(HistoryTvf.description)
   }
 }

@@ -24,6 +24,31 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(GraftSession.localTunings("local-cluster[2,1,1024]").isEmpty)
   }
 
+  test("a repeated pass of the interactive queries hits the codegen cache") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val s = TestSpark.spark
+    val dir = s"${TestSpark.testData}/sf0.01"
+    Tables.register(s, dir)
+    def compilations(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // each query with the single-partition route and without it (advisory
+    // size 1 byte), which together generate more classes than Spark's
+    // default 100-entry cache keeps
+    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    def pass(): Long = {
+      val c0 = compilations()
+      for (size <- Seq("1m", "1"); n <- TestSpark.interactiveQueries) {
+        s.conf.set(advisory, size)
+        try SparkEntry.queries(n)(s, dir).write.format("noop").mode("overwrite").save()
+        finally s.conf.set(advisory, "1m")
+      }
+      compilations() - c0
+    }
+    pass()
+    assert(pass() == 0)
+    assert(s.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftSession.CodegenCacheEntries.toString)
+  }
+
   test("the live (local) test session carries the local tunings") {
     val s = TestSpark.spark
     assert(s.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes") == "1m")
