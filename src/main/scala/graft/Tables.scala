@@ -20,8 +20,10 @@ object Tables {
   /** Tracks the LAST dir registered per session (temp views are
     * session-global, so only one dir's views exist at a time —
     * memoizing on (session, dir) would let register(A); register(B);
-    * register(A) silently leave the views pointing at B). */
-  private val registered = scala.collection.mutable.Map[SparkSession, String]()
+    * register(A) silently leave the views pointing at B). Weak-keyed
+    * like [[SessionMemo]], so a session that is gone is not kept
+    * reachable. */
+  private val registered = scala.collection.mutable.WeakHashMap[SparkSession, String]()
 
   /** Normalize the events `ts` column to TIMESTAMP (LTZ, session tz
     * UTC) regardless of how the generator wrote it:

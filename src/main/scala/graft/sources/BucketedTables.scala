@@ -46,8 +46,10 @@ object BucketedTables {
   /** Tracks the last dir whose facts were bucketed per session, so
     * query impls can depend on the layout without re-writing it (the
     * one-time index build; Bench pre-builds it in warm-up so the
-    * measured star join is pure query time). */
-  private val built = scala.collection.mutable.Map[SparkSession, String]()
+    * measured star join is pure query time). Weak-keyed like
+    * [[graft.SessionMemo]], so a session that is gone is not kept
+    * reachable. */
+  private val built = scala.collection.mutable.WeakHashMap[SparkSession, String]()
 
   def ensureFacts(spark: SparkSession, dir: String, nBuckets: Int = 8): Unit =
     synchronized {
