@@ -3790,43 +3790,44 @@ object EngineOps {
     val sink = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_glog_ssink_$sfName")
     if (sink.exists()) deleteRecursively(sink.toPath)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ssink_ck").toString
-    val q = spark.readStream.format("glog")
-      .option("path", stage.getAbsolutePath)
-      .option("maxFilesPerTrigger", "3")
-      .load()
-      .writeStream.format("glog")
-      .option("path", sink.getAbsolutePath)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val batches = q.recentProgress.count(_.numInputRows > 0).toLong
-    val names = Option(sink.listFiles()).getOrElse(Array.empty).map(_.getName)
-    val nFiles = names.count(_.endsWith(".glog")).toLong
-    // epoch markers live in _glog_metadata/ and are GC'd to the latest
-    // epoch at each commit (the replay ledger stays O(1), not O(epochs))
-    val metaNames = Option(new java.io.File(sink,
-        sources.GraftLogSource.MetaDirName).listFiles())
-      .getOrElse(Array.empty).map(_.getName)
-    // two ledger files per retained epoch: the claim marker plus the
-    // immutable post-CAS version sidecar (the replay's commit proof)
-    val markersOk = metaNames.count(_.startsWith("_epoch-")) == 2 &&
-      metaNames.contains(s"_epoch-${batches - 1}.committed") &&
-      metaNames.contains(s"_epoch-${batches - 1}.version") &&
-      !names.exists(_.endsWith(".inprogress"))
-    val back = spark.read.format("glog")
-      .option("path", sink.getAbsolutePath).load()
-      .agg(count(lit(1)).as("n"),
-        sum(round(col("value") * 100).cast("long")).as("cents")).collect()(0)
-    val oracle = t(spark, dir, "events")
-      .agg(count(lit(1)).as("n"),
-        sum(round(col("value") * 100).cast("long")).as("cents")).collect()(0)
-    deleteRecursively(java.nio.file.Paths.get(ckpt))
-    Seq((batches, nFiles, back.getLong(0), markersOk,
-      back.getLong(0) == oracle.getLong(0) &&
-        back.getLong(1) == oracle.getLong(1)))
-      .toDF("n_batches", "n_files", "n_rows", "epochs_marked", "matches_batch")
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ssink_ck")
+    try {
+      val q = spark.readStream.format("glog")
+        .option("path", stage.getAbsolutePath)
+        .option("maxFilesPerTrigger", "3")
+        .load()
+        .writeStream.format("glog")
+        .option("path", sink.getAbsolutePath)
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination() finally if (q.isActive) q.stop()
+      val batches = q.recentProgress.count(_.numInputRows > 0).toLong
+      val names = Option(sink.listFiles()).getOrElse(Array.empty).map(_.getName)
+      val nFiles = names.count(_.endsWith(".glog")).toLong
+      // epoch markers live in _glog_metadata/ and are GC'd to the latest
+      // epoch at each commit (the replay ledger stays O(1), not O(epochs))
+      val metaNames = Option(new java.io.File(sink,
+          sources.GraftLogSource.MetaDirName).listFiles())
+        .getOrElse(Array.empty).map(_.getName)
+      // two ledger files per retained epoch: the claim marker plus the
+      // immutable post-CAS version sidecar (the replay's commit proof)
+      val markersOk = metaNames.count(_.startsWith("_epoch-")) == 2 &&
+        metaNames.contains(s"_epoch-${batches - 1}.committed") &&
+        metaNames.contains(s"_epoch-${batches - 1}.version") &&
+        !names.exists(_.endsWith(".inprogress"))
+      val back = spark.read.format("glog")
+        .option("path", sink.getAbsolutePath).load()
+        .agg(count(lit(1)).as("n"),
+          sum(round(col("value") * 100).cast("long")).as("cents")).collect()(0)
+      val oracle = t(spark, dir, "events")
+        .agg(count(lit(1)).as("n"),
+          sum(round(col("value") * 100).cast("long")).as("cents")).collect()(0)
+      Seq((batches, nFiles, back.getLong(0), markersOk,
+        back.getLong(0) == oracle.getLong(0) &&
+          back.getLong(1) == oracle.getLong(1)))
+        .toDF("n_batches", "n_files", "n_rows", "epochs_marked", "matches_batch")
+    } finally deleteRecursively(ckpt)
   }
 
   /** MEASURED runtime filtering INTO the DSv2 scan

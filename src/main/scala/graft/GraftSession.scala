@@ -21,7 +21,17 @@ import org.apache.spark.sql.SparkSession
   *  - the engine's extensions ([[graft.plans.GraftExtensions]]),
   *    among them the single-partition route for small join-free
   *    queries ([[graft.plans.SmallQueryRoute]]), whose size gate is
-  *    the advisory partition size below.
+  *    the advisory partition size below;
+  *  - a `file:` filesystem that does not fork
+  *    ([[graft.sources.NoForkLocalFileSystem]] and its `FileContext`
+  *    twin [[graft.sources.NoForkLocalFs]]). Without libhadoop,
+  *    Hadoop's local filesystem runs `chmod` in a child process on
+  *    every `create` and `mkdirs` (5.6-6.4 ms each) and `readlink` on
+  *    every `getFileLinkStatus` (3.0-3.4 ms, four per
+  *    `FileContext.rename`, the call behind Spark's streaming offset
+  *    and commit logs); the `java.nio` chmod takes 0.01-0.03 ms.
+  *    `FileSystem` caches one `file:` instance per JVM, so this holds
+  *    only where no local FileSystem was made before the first session.
   */
 object GraftSession {
 
@@ -81,6 +91,10 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.NoForkLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.NoForkLocalFs].getName)
     localTunings(resolvedMaster).foldLeft(common) {
       case (b, (k, v)) => b.config(k, v)
     }

@@ -183,6 +183,13 @@ object Triangles {
     * frame; the count executes eagerly so the edge cache's lifecycle
     * stays inside this call.
     *
+    * The count is over the underlying SIMPLE graph: duplicate
+    * (src, dst) pairs — a multigraph's parallel edges — are dropped
+    * first, inside the repartition's own shuffle (hash on (src, dst)
+    * already clusters the distinct). Kept, they would split the two
+    * routes: the intersect kernel counts min-multiplicity, the wedge
+    * join products, so the result would change across the gate.
+    *
     * Three measured levers (sf0.1 dense graph, 1.35e8 wedges,
     * 23.7 s → 1.8 s combined):
     *  - explicit repartition to full parallelism: the wedge join is
@@ -202,7 +209,8 @@ object Triangles {
     val spark = oriented.sparkSession
     import spark.implicits._
     val e = oriented.select(col("src"), col("dst"), col("dst_rank"))
-      .repartition(spark.sparkContext.defaultParallelism * 2)
+      .repartition(spark.sparkContext.defaultParallelism * 2, col("src"), col("dst"))
+      .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // EDGE-ITERATOR route under the measured broadcast gate (the

@@ -274,6 +274,37 @@ class TrianglesSpec extends AnyFunSuite {
     }
   }
 
+  test("property: on multigraphs both routes count the simple graph, across the gate") {
+    import spark.implicits._
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    // random simple graphs (s1 < s2) with every edge repeated 1-3 times
+    val multigraphGen: Gen[Seq[(Long, Long)]] = for {
+      n <- Gen.chooseNum(4, 10)
+      picks <- Gen.listOfN(n * (n - 1) / 2, Gen.chooseNum(0.0, 1.0))
+      reps <- Gen.listOfN(n * (n - 1) / 2, Gen.chooseNum(1, 3))
+    } yield {
+      val pairs = for (a <- 0L until n; b <- (a + 1) until n) yield (a, b)
+      pairs.zip(picks).zip(reps).flatMap { case ((e, r), k) =>
+        if (r < 0.6) Seq.fill(k)(e) else Nil }
+    }
+    val graphs = (0 until 6).flatMap(i =>
+      multigraphGen.apply(Gen.Parameters.default, Seed(2042L + i)))
+      .filter(g => g.distinct.size < g.size)
+    assert(graphs.size >= 4)
+    graphs.foreach { g =>
+      val df = g.toDF("s1", "s2")
+      val expected = bruteTriangles(g.distinct)
+      def counts(): Seq[Long] = Seq(Triangles.orientByKey(df), Triangles.orientByDegree(df))
+        .map(o => scalar(Triangles.triangleCount(o)))
+      val viaIntersect = counts()                               // default gate: on
+      spark.conf.set(Triangles.BroadcastMaxRowsKey, "0")        // force wedge join
+      val viaWedges = try counts() finally spark.conf.unset(Triangles.BroadcastMaxRowsKey)
+      assert(viaIntersect == Seq(expected, expected), s"intersect route on $g")
+      assert(viaWedges == Seq(expected, expected), s"wedge route on $g")
+    }
+  }
+
   test("eng_triangles_deg reports consistent exact counts") {
     val row = EngineOps.queries("eng_triangles_deg")(spark, "/root/testdata/sf0.001")
       .collect()(0)
