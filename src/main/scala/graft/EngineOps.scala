@@ -1131,10 +1131,13 @@ object EngineOps {
       spark.sql("DROP TABLE IF EXISTS graft_cat.orders_cbo")
       spark.sql("DROP TABLE IF EXISTS graft_cat.customer_cbo")
       spark.sql("DROP TABLE IF EXISTS graft_cat.nation_cbo")
-      // LOCATION ⇒ external: DROP above never touches the source data
-      spark.sql(s"CREATE TABLE graft_cat.orders_cbo USING parquet LOCATION '$dir/orders.parquet'")
-      spark.sql(s"CREATE TABLE graft_cat.customer_cbo USING parquet LOCATION '$dir/customer.parquet'")
-      spark.sql(s"CREATE TABLE graft_cat.nation_cbo USING parquet LOCATION '$dir/nation.parquet'")
+      // LOCATION ⇒ external: DROP above never touches the source data.
+      // skipHiveMetadata: store Spark's own table format at once. Hive
+      // rejects a single-file location, and Spark would log the
+      // metastore's stack before falling back to that format anyway
+      for (t <- Seq("orders", "customer", "nation"))
+        spark.sql(s"CREATE TABLE graft_cat.${t}_cbo USING parquet " +
+          s"OPTIONS (skipHiveMetadata 'true') LOCATION '$dir/$t.parquet'")
 
       def dimSide: DataFrame = spark.table("graft_cat.customer_cbo")
         .filter(col("c_nationkey") === 3).select(col("c_custkey"))

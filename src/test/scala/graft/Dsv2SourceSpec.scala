@@ -102,7 +102,7 @@ class Dsv2SourceSpec extends AnyFunSuite {
 
   test("robustness: conf serialization, index rollover, empty compact, Complete-mode rejection") {
     // SerializableConf: a session-conf key survives the
-    // driver->executor hop (Writable round-trip through Java
+    // driver->executor hop (its key/value round trip through Java
     // serialization)
     val conf = GraftLogSource.driverHadoopConf()
     conf.set("graft.test.marker", "xyzzy")
