@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFunctions, VectorFunctions}
-import graft.operators.{Attention, Cascade, KMeans, LmScore, MinHashDedup, Multimodal, PageRank, ProductQuantizer, SimilaritySearch}
+import graft.operators.{Attention, Cascade, Checkpoints, KMeans, LmScore, MinHashDedup, Multimodal, PageRank, ProductQuantizer, SimilaritySearch}
 import graft.streaming.{StatefulOps, Telemetry}
 import org.apache.spark.sql.graftshim.ScratchDir
 
@@ -82,19 +82,17 @@ object EngineOps {
     val docs = t(spark, dir, "documents")
     val isDelta = col("doc_id") % 7 === 3
     val baseSigned = baseSigCache(spark, dir) {
-      MinHashDedup.signatures(docs.filter(!isDelta), "doc_id", "text",
-          shingleK = 3, numHashes = 64)
-        .localCheckpoint(true)
+      Checkpoints.truncate(MinHashDedup.signatures(docs.filter(!isDelta),
+        "doc_id", "text", shingleK = 3, numHashes = 64))
     }
     val delta = docs.filter(isDelta)
     // two consumers below (pair stats + distinct-doc census) would
     // each re-run the delta signature + banded join pipeline —
     // materialize the bounded pair set once (the dedupPipeline /
     // qa19 shared-frame discipline)
-    val pairs = MinHashDedup.incrementalPairs(baseSigned, delta,
-        idCol = "doc_id", textCol = "text", shingleK = 3,
-        bands = 16, rowsPerBand = 4, threshold = 0.2)
-      .localCheckpoint(true)
+    val pairs = Checkpoints.truncate(MinHashDedup.incrementalPairs(baseSigned, delta,
+      idCol = "doc_id", textCol = "text", shingleK = 3,
+      bands = 16, rowsPerBand = 4, threshold = 0.2))
     // delta membership is a pure predicate on the id (the split rule
     // above) — no lookup table needed
     def d(c: org.apache.spark.sql.Column) = c % 7 === 3
@@ -207,8 +205,8 @@ object EngineOps {
     // O(n·k·dim) kernel pass); a small corpus skips the shuffle —
     // per-row work is too small to repay it
     val corpusRaw = base.unionByName(dups)
-    val corpus = (if (n >= 32768) corpusRaw.repartition(dp) else corpusRaw)
-      .localCheckpoint(true)
+    val corpus = Checkpoints.truncate(
+      if (n >= 32768) corpusRaw.repartition(dp) else corpusRaw)
     val k = math.max(8L, math.min(4096L, n / 64L)).toInt
     // the fit sample scales WITH k (16 points per centroid, floor
     // 4096) so a large-k codebook never degenerates to sample == k
@@ -223,27 +221,24 @@ object EngineOps {
     // doesn't matter downstream (assignment is per-row; vecSumAgg's
     // partition-order wiggle is pinned by the fit's 9-dp rounding).
     val sampleParts = math.max(1, math.min(dp, sampleSize / 1024))
-    val sample = corpus.orderBy(col("vec_id"))
+    val sample = Checkpoints.truncate(corpus.orderBy(col("vec_id"))
       .limit(sampleSize)
-      .repartition(sampleParts)
-      .localCheckpoint(true)
+      .repartition(sampleParts))
     val init = SimilaritySearch.sampledCodebook(sample, "vec_id", "embedding", k)
     val (codebook, _) = KMeans.fit(sample, "embedding", maxIter = 3,
       tol = 1e-4, init)
     // assign ONCE and share: the O(n·k·dim) argmax kernel pass is the
     // entry's dominant per-row cost, and both the pair join and the
     // member/survivor censuses need the same (id, cell) frame
-    val assigned = SimilaritySearch
-      .assignCells(corpus, "vec_id", "embedding", codebook)
-      .localCheckpoint(true)
-    val pairs = SimilaritySearch.semanticDedupPairsAssigned(
-        assigned, "vec_id", "embedding", minCosine = 0.95)
-      .localCheckpoint(true)
-    val dropped = operators.DedupClusters
+    val assigned = Checkpoints.truncate(
+      SimilaritySearch.assignCells(corpus, "vec_id", "embedding", codebook))
+    val pairs = Checkpoints.truncate(SimilaritySearch.semanticDedupPairsAssigned(
+      assigned, "vec_id", "embedding", minCosine = 0.95))
+    // two consumers: the anti join + the census
+    val dropped = Checkpoints.truncate(operators.DedupClusters
       .connectedComponents(pairs.select(col("id_a"), col("id_b")), "id_a", "id_b")
       .filter(col("node") =!= col("cluster"))
-      .select(col("node").as("vec_id"))
-      .localCheckpoint(true) // two consumers: the anti join + the census
+      .select(col("node").as("vec_id")))
     // THE production drop — a distributed LEFT ANTI join on the id
     // (the eng_dedup_pipeline shape): survivors never round-trip
     // through the driver, so the spelling holds at any corpus size
@@ -281,10 +276,9 @@ object EngineOps {
     val keepExact = keyed.groupBy(col("_h")).agg(min(col("doc_id")).as("keep_id"))
     // three consumers (near-dup pairs, anti-join, stats): materialize
     // once instead of re-running the scan+hash+join per consumer
-    val exactKept = keyed.join(keepExact, Seq("_h"))
+    val exactKept = Checkpoints.truncate(keyed.join(keepExact, Seq("_h"))
       .filter(col("doc_id") === col("keep_id"))
-      .select(col("doc_id"), col("text"), col("source"))
-      .localCheckpoint(true)
+      .select(col("doc_id"), col("text"), col("source")))
     // stage 2: near-dup clusters over the exact survivors
     val pairs = MinHashDedup.simHashPairs(exactKept, "doc_id", "text",
       maxHamming = 3, maxBucket = 128)
@@ -710,10 +704,10 @@ object EngineOps {
                       corpus: DataFrame): (ProductQuantizer.Model, DataFrame) =
     pqCache(spark, dir) {
       val model = ProductQuantizer.fit(corpus, "vec_id", "embedding", m = 16, k = 32)
-      // localCheckpoint truncates lineage: bench samples re-read the
-      // codes, never re-run the encode projection
-      val encoded = ProductQuantizer.encode(corpus, "vec_id", "embedding", model)
-        .localCheckpoint(true)
+      // truncated lineage: bench samples re-read the codes, never
+      // re-run the encode projection
+      val encoded = Checkpoints.truncate(
+        ProductQuantizer.encode(corpus, "vec_id", "embedding", model))
       (model, encoded)
     }
 
@@ -738,7 +732,7 @@ object EngineOps {
     val index = ivfPqCache(spark, dir) {
       val idx = ProductQuantizer.fitIvfPq(corpus, "vec_id", "embedding",
         refinedCodebook(spark, dir, corpus), m = 16, k = 32)
-      idx.copy(encoded = idx.encoded.localCheckpoint(true))
+      idx.copy(encoded = Checkpoints.truncate(idx.encoded))
     }
     ProductQuantizer.ivfPqTopK(index, corpus, "vec_id", "embedding",
         probeVec(spark, dir), k = 10, nProbe = 4, shortlist = 50)
@@ -788,11 +782,10 @@ object EngineOps {
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       dropScratchCheckpoint(qName)
     }
-    val out = spark.table(qName)
+    val out = Checkpoints.truncate(spark.table(qName)
       .select(unix_micros(col("window.start")).as("ws"), col("event_type"),
         col("cnt"), round(col("sum_v"), 4).as("sum_v"))
-      .orderBy(col("ws"), col("event_type"), col("cnt"), col("sum_v"))
-      .localCheckpoint(true)
+      .orderBy(col("ws"), col("event_type"), col("cnt"), col("sum_v")))
     spark.catalog.dropTempView(qName)
     out
   }
@@ -832,13 +825,12 @@ object EngineOps {
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       dropScratchCheckpoint(qName)
     }
-    val out = spark.table(qName)
+    val out = Checkpoints.truncate(spark.table(qName)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_sessions"), sum(col("n_events")).as("n_events"))
       .groupBy(col("n_sessions"))
       .agg(count(lit(1)).as("n_users"), sum(col("n_events")).as("n_events"))
-      .orderBy(col("n_sessions"), col("n_users"), col("n_events"))
-      .localCheckpoint(true)
+      .orderBy(col("n_sessions"), col("n_users"), col("n_events")))
     spark.catalog.dropTempView(qName)
     out
   }
@@ -2068,8 +2060,8 @@ object EngineOps {
     Telemetry.logBatch(ev.filter(col("event_id") % 2 === 1), tmp.toString, 1)
     // the writer's schema is known, so skip json()'s inference pass
     val logSchema = ev.schema.add("batch_id", org.apache.spark.sql.types.LongType)
-    val out = Telemetry.stats(spark, tmp.toString, schema = Some(logSchema))
-      .localCheckpoint(eager = true)
+    val out = Checkpoints.truncate(
+      Telemetry.stats(spark, tmp.toString, schema = Some(logSchema)))
     deleteRecursively(tmp)
     out
   }
@@ -4120,11 +4112,10 @@ object EngineOps {
   private val incrementalSplit = "2024-01-21"
   private def incrementalAgg(spark: SparkSession, dir: String): DataFrame = {
     val base = basePartialCache(spark, dir) {
-      operators.IncrementalAgg.partial(
-          t(spark, dir, "events")
-            .filter(col("ts") < lit(incrementalSplit).cast("timestamp")),
-          Seq("event_type"), "value", "user_id")
-        .localCheckpoint(true)
+      Checkpoints.truncate(operators.IncrementalAgg.partial(
+        t(spark, dir, "events")
+          .filter(col("ts") < lit(incrementalSplit).cast("timestamp")),
+        Seq("event_type"), "value", "user_id"))
     }
     val delta = operators.IncrementalAgg.partial(
       t(spark, dir, "events")
@@ -4362,12 +4353,11 @@ object EngineOps {
       t(spark, dir, "part"), "p_partkey", col("p_retailprice"), margin = 100)
     try {
       val cut = s.topK(10).agg(min(col("score"))).head().getDouble(0)
-      s.topK(10).withColumn("refinement", lit("k10"))
+      Checkpoints.truncate(s.topK(10).withColumn("refinement", lit("k10"))
         .unionByName(s.topK(50).withColumn("refinement", lit("k50")))
         .unionByName(s.topK(25, cut).withColumn("refinement", lit("k25cut")))
         .select(col("refinement"), col("id"), round(col("score"), 4).as("score"))
-        .orderBy(col("refinement"), col("score").desc_nulls_last, col("id"))
-        .localCheckpoint(true)
+        .orderBy(col("refinement"), col("score").desc_nulls_last, col("id")))
     } finally s.unpersist()
   }
 

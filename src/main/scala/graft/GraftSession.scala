@@ -50,9 +50,9 @@ object GraftSession {
   val CodegenCacheEntries = 4096
 
   /** `master` defaults to `local[cores]`. The LOCAL-ONLY AQE tunings
-    * (1 MB advisory size, size-first coalescing — FloorLab-measured on
-    * the single-node rig) are applied only when the resolved master is
-    * local: a caller reusing this builder with a cluster master gets
+    * (1 MB advisory size, size-first coalescing — measured by
+    * interleaved A/B on the single-node rig) are applied only when
+    * the resolved master is local: a caller reusing this builder with a cluster master gets
     * Spark's production defaults (64 MB advisory) instead of a
     * pathological 1 MB reducer size at 100 TB. */
   def builder(cores: String = "4", master: String = ""): SparkSession.Builder = {
@@ -91,6 +91,10 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
+      // under spark.checkpoint.dir, Checkpoints.truncate writes reliable
+      // checkpoints; their files go when the frame is garbage-collected,
+      // as local checkpoint blocks already do, not at session end
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.hadoop.fs.file.impl",
         classOf[graft.sources.NoForkLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
@@ -103,12 +107,12 @@ object GraftSession {
   /** LOCAL-ONLY tunings, empty for any cluster master.
     *  - Size-first coalescing: small post-shuffle stages collapse to
     *    few tasks instead of fanning 32 near-empty ones. Measured
-    *    (FloorLab, interleaved A/B over the full headline set,
-    *    sf0.1): −15% vs parallelism-first at the same advisory size.
+    *    (interleaved A/B over the full headline set, sf0.1): −15% vs
+    *    parallelism-first at the same advisory size.
     *  - 1 MB advisory size: on a single 32-thread node the sub-GB
     *    bench stages need small reducers to keep the cores busy —
     *    1 MB beats the 64 MB default by another −13% headline
-    *    (FloorLab: 61.1 s vs 72.1 s) and un-serializes few-group
+    *    (61.1 s vs 72.1 s) and un-serializes few-group
     *    aggregates like qa16's 3-group exact percentile (3.6 MB of
     *    buffers → 1 task at 64 MB). 1 MB reducers at 100 TB would
     *    explode the task count, so a cluster session keeps Spark's
@@ -124,7 +128,7 @@ object GraftSession {
       // Spark's default of 128 in-memory keys demotes every
       // collect_list/collect_set aggregate to sort-based aggregation
       // almost immediately; raising the bar is worth −10% headline
-      // (FloorLab interleaved A/B, sf0.1: 59.7 s → 53.8 s). Local-only
+      // (interleaved A/B, sf0.1: 59.7 s → 53.8 s). Local-only
       // because the safety argument differs on a cluster: sort-based
       // fallback is the memory-safe choice for unbounded per-key
       // buffers, and although every object agg in THIS library keeps

@@ -815,9 +815,9 @@ object QueryInventory {
       val ev = spark.table("events").select(col("event_type"), col("value"))
       val med = ev.groupBy(col("event_type"))
         .agg(expr("median(value)").as("med"))
-      val dev = ev.join(broadcast(med), Seq("event_type"))
-        .select(col("event_type"), abs(col("value") - col("med")).as("adev"))
-        .localCheckpoint(true)
+      val dev = graft.operators.Checkpoints.truncate(
+        ev.join(broadcast(med), Seq("event_type"))
+          .select(col("event_type"), abs(col("value") - col("med")).as("adev")))
       val mad = dev.groupBy(col("event_type"))
         .agg(expr("median(adev)").as("mad"))
       dev.join(broadcast(mad), Seq("event_type"))
@@ -1542,10 +1542,9 @@ object QueryInventory {
       import org.apache.spark.sql.functions._
       // materialized once: the per-range counts and the ranked output
       // both consume the range exchange
-      val parts = base
+      val parts = graft.operators.Checkpoints.truncate(base
         .repartitionByRange(col("c_acctbal"), col("c_custkey"))
-        .withColumn("pid", spark_partition_id())
-        .localCheckpoint(true)
+        .withColumn("pid", spark_partition_id()))
       val counts = parts.groupBy(col("pid")).agg(count(lit(1)).as("cnt"))
         .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
       val n = counts.map(_._2).sum

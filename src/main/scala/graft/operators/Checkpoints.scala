@@ -2,49 +2,35 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** Lineage truncation for iterative operators (PageRank,
-  * DedupClusters): without it, iterative plans double in depth each
-  * sweep and the optimizer re-walks the whole lineage per action.
+/** The engine's one checkpoint policy: every lineage truncation in
+  * the engine goes through [[truncate]]. Iterative operators
+  * (PageRank, DedupClusters) need it because their plans otherwise
+  * double in depth each sweep; shared frames (memo builds, frames with
+  * several consumers, stream-entry results) need it so no consumer
+  * re-runs the upstream pipeline.
   *
-  * Two durability levels, chosen per call:
-  *  - `localCheckpoint` (default, `checkpointDir = None`): blocks
-  *    live on executors — free of distributed-FS traffic, right for
-  *    local/bench runs, but an executor loss mid-iteration kills the
-  *    job because the truncated lineage cannot be recomputed.
-  *  - reliable `checkpoint` (`checkpointDir = Some(dir)`): blocks
-  *    written to a fault-tolerant directory (HDFS/object store on a
-  *    cluster), so lost executors recover from the checkpoint instead
-  *    of failing the job — the correct setting for long iterative
-  *    jobs at 100 TB, at the cost of one write+read per truncation.
+  * The durability level follows Spark's own `spark.checkpoint.dir`
+  * (read by `SparkContext` at startup, or set later with
+  * `setCheckpointDir`):
+  *  - unset: `localCheckpoint`. Blocks live on executors, with no
+  *    distributed-FS traffic. Right for local and bench runs, but an
+  *    executor loss kills the job, because the truncated lineage
+  *    cannot be recomputed.
+  *  - set: reliable `checkpoint`. Blocks are written under the
+  *    directory (HDFS or an object store on a cluster), so a lost
+  *    executor recovers from them instead of failing the job. This is
+  *    the setting for long jobs at 100 TB, at the cost of one write
+  *    and read per truncation. `GraftSession` turns on
+  *    `spark.cleaner.referenceTracking.cleanCheckpoints`, so the files
+  *    go when their frame is garbage-collected.
   *
-  * Results are bit-identical either way (asserted in
-  * PageRankSpec/DedupClustersSpec); only failure recovery differs. */
+  * Results are identical either way (asserted in CheckpointPolicySpec,
+  * PageRankSpec and DedupClustersSpec); only failure recovery differs. */
 object Checkpoints {
 
-  /** The raw dir last passed to setCheckpointDir, per context.
-    * SparkContext stores the QUALIFIED path plus a random UUID
-    * subdirectory (`file:<dir>/<uuid>`), so comparing
-    * `getCheckpointDir` against the raw string never matches — the
-    * naive guard would re-run setCheckpointDir on every truncation
-    * and scatter checkpoint blocks across one fresh UUID directory
-    * per call. Tracking the raw dir keeps repeated truncations of an
-    * iterative job in ONE directory. */
-  private val lastRawDir = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.SparkContext, String]())
-
-  /** Eagerly truncate `df`'s lineage at the durability level implied
-    * by `checkpointDir`. Setting the context's checkpoint dir is
-    * idempotent per raw path; distinct dirs across calls are honored
-    * last-wins (Spark's own semantics). */
-  def truncate(df: DataFrame, checkpointDir: Option[String]): DataFrame =
-    checkpointDir match {
-      case Some(dir) =>
-        val sc = df.sparkSession.sparkContext
-        if (lastRawDir.get(sc) != dir) {
-          sc.setCheckpointDir(dir)
-          lastRawDir.put(sc, dir)
-        }
-        df.checkpoint(eager = true)
-      case None => df.localCheckpoint(eager = true)
-    }
+  /** Truncate `df`'s lineage, eagerly unless `eager = false` (then the
+    * first action over the result materializes it). */
+  def truncate(df: DataFrame, eager: Boolean = true): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager)
+    else df.localCheckpoint(eager)
 }

@@ -26,10 +26,9 @@ import org.apache.spark.sql.functions._
   * propagation is the right spelling here; a ln(n)-round
   * large-star/small-star variant only pays off on long-chain graphs
   * that dedup inputs don't produce. Lineage is truncated per round
-  * (Checkpoints.truncate — localCheckpoint locally, reliable FS
-  * checkpoint via `checkpointDir` on a cluster) so the plan doesn't
-  * grow with iterations — the standard iterative-algorithm discipline
-  * on Spark. */
+  * (Checkpoints.truncate, reliable when `spark.checkpoint.dir` is set)
+  * so the plan doesn't grow with iterations — the standard
+  * iterative-algorithm discipline on Spark. */
 object DedupClusters {
 
   /** Components of the undirected graph given as a pair list.
@@ -55,8 +54,7 @@ object DedupClusters {
     * integral ids. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 12,
-                          localThreshold: Long = 2000000L,
-                          checkpointDir: Option[String] = None): DataFrame = {
+                          localThreshold: Long = 2000000L): DataFrame = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val integralIds = Seq(aCol, bCol).forall { c =>
       pairs.schema(c).dataType match {
@@ -69,14 +67,14 @@ object DedupClusters {
     // MinHash joins), and both the size probe and the chosen
     // component strategy consume it — without this checkpoint the
     // probe alone re-executes the whole upstream graph
-    val mat = Checkpoints.truncate(pairs, checkpointDir)
+    val mat = Checkpoints.truncate(pairs)
     val probeLimit = math.min(localThreshold + 1, Int.MaxValue.toLong).toInt
     if (integralIds && mat.limit(probeLimit).count() <= localThreshold) {
       // cast labels back so both strategies return identical schemas
       val t = pairs.schema(aCol).dataType
       localUnionFind(mat, aCol, bCol)
         .select(col("node").cast(t).as("node"), col("cluster").cast(t).as("cluster"))
-    } else distributedComponents(mat, aCol, bCol, maxIter, checkpointDir)
+    } else distributedComponents(mat, aCol, bCol, maxIter)
   }
 
   /** Single-task union-find with path compression + union by rank;
@@ -118,8 +116,7 @@ object DedupClusters {
   }
 
   private def distributedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                                    maxIter: Int,
-                                    checkpointDir: Option[String]): DataFrame = {
+                                    maxIter: Int): DataFrame = {
     // undirected: both directions, deduplicated
     val edges = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
       .union(pairs.select(col(bCol).as("a"), col(aCol).as("b")))
@@ -130,8 +127,7 @@ object DedupClusters {
     // min over rows of least(a, b) = least(a, min(b))
     var labels = Checkpoints.truncate(
       edges.groupBy(col("a").as("node"))
-        .agg(min(least(col("a"), col("b"))).as("cluster")),
-      checkpointDir)
+        .agg(min(least(col("a"), col("b"))).as("cluster")))
 
     var converged = false
     var round = 0
@@ -150,8 +146,7 @@ object DedupClusters {
       val next = Checkpoints.truncate(
         prop.join(parents, prop("cluster") === parents("p_node"), "left")
           .select(col("node"), col("old"),
-            least(col("cluster"), coalesce(col("p_cluster"), col("cluster"))).as("cluster")),
-        checkpointDir)
+            least(col("cluster"), coalesce(col("p_cluster"), col("cluster"))).as("cluster")))
       converged = next.filter(col("cluster") < col("old")).isEmpty
       labels.unpersist(blocking = false)
       labels = next.select(col("node"), col("cluster"))

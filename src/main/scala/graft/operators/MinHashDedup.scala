@@ -263,12 +263,12 @@ object MinHashDedup {
     * MEMORY_AND_DISK frames registered until the ContextCleaner
     * happens to GC them — a storage leak in long-lived sessions
     * (Bench alone invokes each dedup query twice per run). The
-    * localCheckpoint stores only the result (candidate pairs — tiny
+    * checkpoint stores only the result (candidate pairs — tiny
     * relative to the corpus) and is itself reclaimed when the
     * returned frame is garbage-collected. */
   private def materializeAndRelease(result: DataFrame,
                                     cached: DataFrame*): DataFrame = {
-    val out = result.localCheckpoint(eager = true)
+    val out = Checkpoints.truncate(result)
     cached.foreach(_.unpersist(blocking = false))
     out
   }

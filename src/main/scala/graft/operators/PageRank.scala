@@ -22,12 +22,11 @@ import org.apache.spark.sql.functions._
   * against the dst-clustered edge list, so the edge list never moves
   * and the contribution exchange carries one partially-summed row per
   * node; past the bound, ranks re-join edges on src each sweep and
-  * AQE picks the join strategy. Rank state is
-  * checkpointed every `checkpointEvery` sweeps (Checkpoints.truncate:
-  * localCheckpoint locally, reliable FS checkpoint on a cluster via
-  * `checkpointDir`): iterative plans otherwise double in depth each
-  * sweep and the optimizer re-walks the whole lineage per action (the
-  * classic iterative-Spark trap).
+  * AQE picks the join strategy. Rank state is checkpointed every
+  * `checkpointEvery` sweeps (Checkpoints.truncate, reliable when
+  * `spark.checkpoint.dir` is set): iterative plans otherwise double in
+  * depth each sweep and the optimizer re-walks the whole lineage per
+  * action (the classic iterative-Spark trap).
   *
   * Determinism: ranks round to 9 dp each sweep (fp summation order
   * varies with partitioning — same discipline as KMeans/lloydStep). */
@@ -55,12 +54,9 @@ object PageRank {
 
   /** edges: (src, dst) long columns, multi-edges allowed (weighted by
     * multiplicity). Returns (node, rank) for every node appearing as
-    * src or dst. `checkpointDir = Some(dir)` selects reliable
-    * (fault-tolerant-FS) checkpointing for cluster runs — see
-    * Checkpoints; results are identical either way (PageRankSpec). */
+    * src or dst. */
   def run(edges: DataFrame, iters: Int = 10, damping: Double = 0.85,
-          checkpointEvery: Int = 4,
-          checkpointDir: Option[String] = None): DataFrame = {
+          checkpointEvery: Int = 4): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     // Measured note: disabling AQE for the iteration (the
     // GraphX-style fixed-partitioner instinct) was tried and is ~2×
@@ -80,8 +76,7 @@ object PageRank {
     val linked0 = Checkpoints.truncate(
       weighted
         .join(weighted.groupBy(col("src")).agg(sum(col("w")).as("outdeg")),
-          Seq("src")),
-      checkpointDir) // (src, dst, w, outdeg)
+          Seq("src"))) // (src, dst, w, outdeg)
     // The broadcast gate is a MEASURED census (truncate is eager, so
     // this count is a cheap pass over already-materialized blocks):
     // the rank frame holds exactly the node universe, and
@@ -102,7 +97,7 @@ object PageRank {
     val bcastRank = 2L * m <= broadcastMaxRows(edges.sparkSession)
     val linked =
       if (bcastRank)
-        Checkpoints.truncate(linked0.repartition(col("dst")), checkpointDir)
+        Checkpoints.truncate(linked0.repartition(col("dst")))
       else
         // PAST the gate (the 100 TB regime): the checkpointed RDD scan
         // reports UnknownPartitioning, so EnsureRequirements used to
@@ -148,8 +143,7 @@ object PageRank {
         .join(linked0.select(col("dst").as("node")).distinct(),
           Seq("node"), "left_anti")
         .select(col("node"),
-          round(lit(1.0 - damping) + lit(damping) * lit(0.0), 9).as("rank")),
-      checkpointDir)
+          round(lit(1.0 - damping) + lit(damping) * lit(0.0), 9).as("rank")))
     var rank: DataFrame = null
     var i = 0
     while (i < iters) {
@@ -176,7 +170,7 @@ object PageRank {
             lit(damping) * col("contrib"), 9).as("rank"))
         .unionByName(noInRanks)
       rank = if ((i + 1) % checkpointEvery == 0 && i + 1 < iters)
-        Checkpoints.truncate(next, checkpointDir)
+        Checkpoints.truncate(next)
       else next
       i += 1
     }

@@ -54,9 +54,10 @@ object TransformerBlock {
     // h = LN1(x); q/k/v projections of h (the chunked qkv_proj)
     val normed = tokens.select(col(seqCol).as("seq"), col(posCol).as("pos"),
       vecLayerNorm(col(xCol)).as("h"))
-    val projected =
-      fc(fc(fc(normed, "h", wq, bq, "q"), "h", wk, bk, "k"), "h", wv, bv, "v")
-        .localCheckpoint(eager = false) // attention consumes q/k/v twice (score + value sides)
+    // attention consumes q/k/v twice (score + value sides)
+    val projected = Checkpoints.truncate(
+      fc(fc(fc(normed, "h", wq, bq, "q"), "h", wk, bk, "k"), "h", wv, bv, "v"),
+      eager = false)
 
     // a = OutProj(SDPA(q, k, v)); residual over h needs h joined back
     val attn = Attention.scaledDotProduct(projected, "seq", "pos", "q", "k", "v",
@@ -104,8 +105,8 @@ object TransformerBlock {
     val base = tokens.select(col(seqCol).as("seq"), col(posCol).as("pos"),
       vecToDouble(col(xCol)).as("x"))
       .withColumn("h", vecRmsNorm(col("x")))
-    val projected = fc(fc(fc(base, "h", wq, "q"), "h", wk, "k"), "h", wv, "v")
-      .localCheckpoint(eager = false)
+    val projected = Checkpoints.truncate(
+      fc(fc(fc(base, "h", wq, "q"), "h", wk, "k"), "h", wv, "v"), eager = false)
 
     // head split: (seq, head) becomes the attention partition key —
     // a narrow explode+slice, no self-join

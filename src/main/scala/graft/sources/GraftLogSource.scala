@@ -2980,8 +2980,7 @@ private[sources] class GlogMicroBatchStream(path: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GlogReaderFactory(required.fieldNames, -1, None,
-      new SerializableConf(GraftLogSource.driverHadoopConf()))
+    new GlogReaderFactory(required.fieldNames, -1, None, new SerializableConf(conf))
 }
 
 private[sources] class GlogRowsMetric extends CustomSumMetric {
@@ -3343,8 +3342,7 @@ private[graft] class GlogStreamingWrite(path: String, schema: StructType)
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    new GlogStreamingWriterFactory(path,
-      new SerializableConf(GraftLogSource.driverHadoopConf()))
+    new GlogStreamingWriterFactory(path, new SerializableConf(conf))
 
   private val VersionStamp = "#version:"
 
@@ -3545,9 +3543,11 @@ private[graft] class GlogBatchWrite(path: String, schema: StructType,
     s"glog write schema must be ${GraftLogSource.SchemaFixed.fieldNames.mkString(",")}" +
       s", got ${schema.fieldNames.mkString(",")}")
 
+  // one Hadoop-conf copy per write: factory, commit and abort share it
+  @transient private lazy val conf: Configuration = GraftLogSource.driverHadoopConf()
+
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new GlogWriterFactory(path,
-      new SerializableConf(GraftLogSource.driverHadoopConf()))
+    new GlogWriterFactory(path, new SerializableConf(conf))
 
   /** Job commit = claim the staged files in (still invisible), then
     * ONE manifest CAS making the whole statement atomic for readers:
@@ -3561,7 +3561,6 @@ private[graft] class GlogBatchWrite(path: String, schema: StructType,
     * version — no reader ever sees the slice deleted but not yet
     * restated. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = GraftLogSource.driverHadoopConf()
     val dir = GraftLogSource.resolveDir(path)
     val fs = GraftLogSource.fsFor(dir, conf)
     fs.mkdirs(dir): Unit
@@ -3587,7 +3586,7 @@ private[graft] class GlogBatchWrite(path: String, schema: StructType,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    GraftLogSource.discardStaged(GraftLogSource.driverHadoopConf(), messages)
+    GraftLogSource.discardStaged(conf, messages)
 }
 
 /** Copy-on-write row-level operation (UPDATE / MERGE / fallback
@@ -3641,11 +3640,11 @@ private[graft] class GlogReplaceGroups(path: String,
   require(schema.fieldNames.sameElements(GraftLogSource.SchemaFixed.fieldNames),
     s"glog rewrite schema must be ${GraftLogSource.SchemaFixed.fieldNames.mkString(",")}" +
       s", got ${schema.fieldNames.mkString(",")}")
+  // one Hadoop-conf copy per statement, as in GlogBatchWrite
+  @transient private lazy val conf: Configuration = GraftLogSource.driverHadoopConf()
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new GlogWriterFactory(path,
-      new SerializableConf(GraftLogSource.driverHadoopConf()))
+    new GlogWriterFactory(path, new SerializableConf(conf))
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = GraftLogSource.driverHadoopConf()
     val dir = GraftLogSource.resolveDir(path)
     val newEntries = GraftLogSource.renameStagedIn(dir, conf, messages)
     import scala.jdk.CollectionConverters._
@@ -3657,7 +3656,7 @@ private[graft] class GlogReplaceGroups(path: String,
     }: Unit
   }
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    GraftLogSource.discardStaged(GraftLogSource.driverHadoopConf(), messages)
+    GraftLogSource.discardStaged(conf, messages)
 }
 
 private[graft] class GlogWriterFactory(path: String, confS: SerializableConf)

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftshim.CheckpointDirs
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.DedupClusters
 
@@ -63,14 +65,17 @@ class DedupClustersSpec extends AnyFunSuite {
   test("reliable checkpointing yields identical components (distributed path)") {
     val pairs = (Seq((2L, 3L), (3L, 1L), (10L, 11L)) ++
       (40L until 55L).map(i => (i, i + 1))).toDF("a", "b")
+    def components() = DedupClusters.connectedComponents(pairs, "a", "b",
+      maxIter = 12, localThreshold = 0L)
+    def labels(c: DataFrame) = c.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_cc").toString
     try {
-      val reliable = DedupClusters.connectedComponents(pairs, "a", "b",
-        maxIter = 12, localThreshold = 0L, checkpointDir = Some(dir))
-      val got = reliable.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val local = DedupClusters.connectedComponents(pairs, "a", "b",
-          maxIter = 12, localThreshold = 0L, checkpointDir = None)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val (reliable, got) = CheckpointDirs.withCheckpointDir(spark.sparkContext, dir) {
+        val c = components()
+        (c, labels(c))
+      }
+      assert(spark.sparkContext.getCheckpointDir.isEmpty)
+      val local = labels(components())
       assert(got == local)
       // checkpoint blocks actually landed in the reliable dir
       val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftshim.CheckpointDirs
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.PageRank
 
@@ -67,15 +69,16 @@ class PageRankSpec extends AnyFunSuite {
     import spark.implicits._
     val edges = (0L until 300L).map(i => (i % 17, (i * 7 + 3) % 23))
     val df = edges.toDF("src", "dst")
+    def ranks(out: DataFrame) =
+      out.collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_pr").toString
     try {
-      val reliable = PageRank.run(df, iters = 6, checkpointEvery = 2,
-        checkpointDir = Some(dir))
-      val got = reliable.collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
-      val local = PageRank.run(df, iters = 6, checkpointEvery = 2,
-          checkpointDir = None)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
+      val (reliable, got) = CheckpointDirs.withCheckpointDir(spark.sparkContext, dir) {
+        val r = PageRank.run(df, iters = 6, checkpointEvery = 2)
+        (r, ranks(r))
+      }
+      assert(spark.sparkContext.getCheckpointDir.isEmpty)
+      val local = ranks(PageRank.run(df, iters = 6, checkpointEvery = 2))
       assert(got == local)
       // checkpoint blocks were ACTUALLY written to the reliable dir
       // (Spark lays out <dir>/<uuid>/rdd-*/part-*)

@@ -10,6 +10,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.connector.write.PhysicalWriteInfo
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
@@ -85,7 +86,8 @@ class SerializableConfSpec extends AnyFunSuite {
   test("serialized glog writer and reader factories reach a filesystem only the session names") {
     // the scheme is known to this session's conf alone (and never
     // cached), so each write and read below resolves it through the
-    // conf its factory shipped
+    // conf its factory shipped: batch and streaming writers, batch and
+    // micro-batch readers
     val session = spark.newSession()
     session.conf.set("fs.sconfprobe.impl", classOf[SessionOnlyFileSystem].getName)
     session.conf.set("fs.sconfprobe.impl.disable.cache", "true")
@@ -94,20 +96,31 @@ class SerializableConfSpec extends AnyFunSuite {
     assertThrows[java.io.IOException](new Path(path).getFileSystem(new Configuration()))
     val before = SparkSession.getActiveSession
     SparkSession.setActiveSession(session)
+    def row(id: Long) = new GenericInternalRow(Array[Any](id, id * 1000, id,
+      UTF8String.fromString("e"), id.toDouble, UTF8String.fromString("{}")))
     try {
       val w = javaRoundTrip(new GlogWriterFactory(path)).createWriter(0, 1L)
-      w.write(new GenericInternalRow(Array[Any](7L, 7000L, 7L,
-        UTF8String.fromString("e"), 7.0, UTF8String.fromString("{}"))))
+      w.write(row(7L))
       new GlogBatchWrite(path, GraftLogSource.SchemaFixed, truncateFirst = false)
         .commit(Array(w.commit()))
+      val sink = new GlogStreamingWrite(path, GraftLogSource.SchemaFixed)
+      val info = new PhysicalWriteInfo { override def numPartitions(): Int = 1 }
+      val sw = javaRoundTrip(sink.createStreamingWriterFactory(info)).createWriter(0, 2L, 0L)
+      sw.write(row(8L))
+      sink.commit(0L, Array(sw.commit()))
       val scan = session.read.format("glog").option("path", path).load()
         .queryExecution.sparkPlan.collectFirst { case b: BatchScanExec => b }.get
-      val reader = javaRoundTrip(scan.readerFactory).createReader(scan.inputPartitions.head)
-      try {
-        assert(reader.next())
-        assert(reader.get().getLong(0) == 7L)
-        assert(!reader.next())
-      } finally reader.close()
+      val stream = new GlogMicroBatchStream(path, GraftLogSource.SchemaFixed,
+        Array.empty, maxFilesPerTrigger = None)
+      for (factory <- Seq(scan.readerFactory, stream.createReaderFactory())) {
+        val ids = scan.inputPartitions.flatMap { p =>
+          val reader = javaRoundTrip(factory).createReader(p)
+          try Iterator.continually(reader.next()).takeWhile(identity)
+            .map(_ => reader.get().getLong(0)).toList
+          finally reader.close()
+        }
+        assert(ids.sorted == Seq(7L, 8L), factory.getClass.getSimpleName)
+      }
     } finally {
       before.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
       org.apache.spark.network.util.JavaUtils.deleteRecursively(dir)
