@@ -1,6 +1,6 @@
 package graft
 
-/** Dev tool (PlanDump family): per-entry Spark job/stage/task
+/** Dev tool: per-entry Spark job/stage/task
   * census — the duplicate-action detector the optimization rounds
   * sweep with. One warm uncounted pass, then one counted pass; call
   * from a spark-shell session with the library on the classpath:

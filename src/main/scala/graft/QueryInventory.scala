@@ -26,7 +26,10 @@ final case class Q(
     tags: String = "",
     /** Optional DataFrame-API implementation used instead of
       * `sparkSql` by the runner (same result contract — asserted by
-      * test); lets scale-path operators back oracle-checked queries. */
+      * test); lets scale-path operators back oracle-checked queries.
+      * An impl stays only with a measured win over its own SQL
+      * (interleaved A/B, recorded on the impl as ratio, wins and scale
+      * point) or a size gate (qw5); one inside the noise is deleted. */
     impl: Option[(org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] = None)
 
 object QueryInventory {
@@ -392,6 +395,7 @@ object QueryInventory {
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus NULLS FIRST""".stripMargin),
     "percentile",
+    // Measured win: impl/SQL median 0.63, 12/12 pairs at sf0.1; 0.61, 12/12 at 10×.
     // ONE percentile buffer per group instead of two: the array form
     // sorts each group's values once and interpolates both quantiles
     // from the same counts map — value-identical (same expression
@@ -802,12 +806,12 @@ object QueryInventory {
       |GROUP BY d.event_type
       |ORDER BY event_type NULLS FIRST, mad NULLS FIRST, n_outliers NULLS FIRST, n NULLS FIRST""".stripMargin,
     "robust,outlier,median,agg",
+    // Measured win: impl/SQL median 0.70, 12/12 pairs at sf0.1; 0.76, 12/12 at 10×.
     // The SQL's `dev` CTE is consumed twice (mad + final report) and
     // Catalyst inlines CTEs, so the scan + deviation join execute
     // twice. The impl materializes dev ONCE (localCheckpoint — a
     // 1-row-per-event frame, the same truncate discipline as the
-    // dedup operators) and feeds both consumers: A/B min-of-4 at
-    // sf0.1 read 0.77 s vs 1.08 s for the SQL spelling (guide §1.2).
+    // dedup operators) and feeds both consumers (guide §1.2).
     // Identical rows/threshold math; impl==sql spec-asserted.
     impl = { (spark, dir) =>
       Tables.register(spark, dir)
@@ -963,6 +967,7 @@ object QueryInventory {
       |GROUP BY a.user_id
       |ORDER BY uid NULLS FIRST, n_pairs NULLS FIRST""".stripMargin),
     "join,range",
+    // Measured win: impl/SQL median 0.53, 12/12 pairs at sf0.1; 0.42, 12/12 at 10×.
     impl = Some { (spark, dir) =>
       import org.apache.spark.sql.functions._
       graft.Tables.register(spark, dir)
@@ -1151,14 +1156,11 @@ object QueryInventory {
   /** Interval-overlap join: concurrent user sessions. Events
     * sessionize per user (6-hour gap), and each user pair counts its
     * overlapping session intervals + total overlap seconds. The
-    * declarative spelling joins on the overlap predicate alone — NO
-    * equi key, which Spark plans as a broadcast nested loop (fine for
-    * the bounded 40-user slice, quadratic at scale). The runner uses
-    * the bucketed interval join (graft.plans.IntervalJoin): intervals
-    * explode to the 1-day buckets they span, pairs join on the bucket
-    * id, and each pair is emitted in exactly one bucket — shuffle key
-    * = bucket, per-task work bounded by concurrent-session density,
-    * never O(sessions²). */
+    * spelling joins on the overlap predicate alone — NO equi key, which
+    * Spark plans as a broadcast nested loop. That is bounded: the
+    * `user_id < 40` slice stays at ~2,600 events from sf0.01 up (users
+    * grow with the scale factor, and ScaleData's key shift keeps the
+    * slice fixed), so its sessions never grow with the data. */
   val qj14 = Q("qj14_interval_join",
     """WITH e AS (
       |  SELECT user_id, event_id, unix_micros(ts) AS tus,
@@ -1202,38 +1204,7 @@ object QueryInventory {
       |FROM p GROUP BY ua, ub
       |ORDER BY ua NULLS FIRST, ub NULLS FIRST, n_overlaps NULLS FIRST,
       |         ov_sec NULLS FIRST""".stripMargin),
-    "join,interval,overlap,session",
-    impl = Some { (spark, dir) =>
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      graft.Tables.register(spark, dir)
-      val gapMicros = 21600000000L // 6 h, matches the SQL spelling
-      val w = Window.partitionBy("user_id").orderBy(col("tus"), col("event_id"))
-      val iv = spark.table("events")
-        .filter(col("user_id") < 40)
-        .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("tus"))
-        .withColumn("prev_tus", lag(col("tus"), 1).over(w))
-        .withColumn("sid", sum(when(col("prev_tus").isNull ||
-            col("tus") - col("prev_tus") > gapMicros, 1).otherwise(0))
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy(col("user_id"), col("sid"))
-        .agg(min(col("tus")).as("s_start"), max(col("tus")).as("s_end"))
-      val left = iv.select(struct(col("user_id"), col("sid")).as("l_id"),
-        col("s_start").as("l_start"), col("s_end").as("l_end"))
-      val right = iv.select(struct(col("user_id"), col("sid")).as("r_id"),
-        col("s_start").as("r_start"), col("s_end").as("r_end"))
-      graft.plans.IntervalJoin
-        .overlapPairs(left, right, bucketWidth = 86400000000L) // 1-day buckets
-        .filter(col("l_id.user_id") < col("r_id.user_id"))
-        .select(col("l_id.user_id").as("ua"), col("r_id.user_id").as("ub"),
-          (least(col("l_end"), col("r_end"))
-            - greatest(col("l_start"), col("r_start"))).as("ov"))
-        .groupBy(col("ua"), col("ub"))
-        .agg(count(lit(1)).as("n_overlaps"),
-          round(sum(col("ov")) / lit(1000000.0), 4).as("ov_sec"))
-        .orderBy(asc_nulls_first("ua"), asc_nulls_first("ub"),
-          asc_nulls_first("n_overlaps"), asc_nulls_first("ov_sec"))
-    })
+    "join,interval,overlap,session")
 
   /** TPC-H Q3 flavor (shipping priority): the canonical 3-table
     * selective star — segment-filtered customers ⋈ orders ⋈ lineitem
@@ -1310,24 +1281,7 @@ object QueryInventory {
       // shipdate >= (top1 smax unless mine is the top1 supplier, else
       // top2). Two shuffles of the slim line projection, no self-join.
       // collect_list is bounded by lines-per-order (<= 7, TPC-H shape).
-      //
-      // r9 drift audit (the r8 sf1 snapshot read impl_vs_sql 1.35x):
-      // re-measured under the sentinel gate — two clean targeted runs
-      // 0.75x/0.99x, then min-of-3 interleaved impl 1.68s vs SQL
-      // 1.63s (1.03x). The drift was denominator contention, not a
-      // plan change. A join-back-free respelling (per-order bounded
-      // arrays + HOF filter/transform) measured 1.36x SLOWER: the
-      // interpreted HOF lambdas cost more than the slim join-back
-      // shuffle they avoid, so this spelling stands.
-      // The r9 FULL sweep read 1.34x again with BOTH sides ~75%
-      // slower than the targeted numbers (impl 2.97s / SQL 2.22s) —
-      // a contention window inside an otherwise gate-clean run, the
-      // known whole-run-spread blind spot. A fourth targeted
-      // gate-clean re-measure immediately after (BENCH_SCALE_qj16
-      // .json, spread 1.50) read impl 1.62s / SQL 1.72s = 0.94x.
-      // Four clean targeted samples (0.75/0.99/1.03/0.94) all sit
-      // inside the 1.2x band; the full-sweep cells for this query
-      // are the noisy measurement, not the operator.
+      // Measured win at sf0.1: impl/SQL median 0.79, 12/12 pairs (10×: 0.97, 7/12, noise).
       import org.apache.spark.sql.functions._
       graft.Tables.register(spark, dir)
       val lf = spark.table("lineitem")
@@ -1488,6 +1442,8 @@ object QueryInventory {
       |FROM customer
       |ORDER BY c_custkey NULLS FIRST, quartile NULLS FIRST, pr NULLS FIRST""".stripMargin,
     "window,ntile",
+    // Kept for its size gate, not a measured win: below the gate the
+    // impl IS the SQL plan (impl/SQL median 1.06, 4/12 pairs at sf0.1).
     // Two-phase global rank instead of the empty-PARTITION-BY window
     // (which moves EVERY customer row to ONE partition — the
     // WindowExec "No Partition Defined" scale-killer; guide §2).
@@ -1867,18 +1823,7 @@ object QueryInventory {
       |WHERE e.vec_id <> 0
       |ORDER BY dot_score DESC NULLS LAST, vec_id ASC NULLS FIRST
       |LIMIT 20""".stripMargin),
-    "vector,gemv,topk",
-    impl = Some { (spark, dir) =>
-      import org.apache.spark.sql.functions._
-      import graft.functions.VectorFunctions.vecDot
-      graft.Tables.register(spark, dir)
-      val e = spark.table("embeddings")
-      val p = e.filter(col("vec_id") === 0).select(col("embedding").as("p"))
-      e.filter(col("vec_id") =!= 0).crossJoin(p)
-        .select(col("vec_id"), round(vecDot(col("embedding"), col("p")), 4).as("dot_score"))
-        .orderBy(col("dot_score").desc_nulls_last, col("vec_id").asc_nulls_first)
-        .limit(20)
-    })
+    "vector,gemv,topk")
 
   /** Relational GEMM (reference CIM_MatMul,
     * /root/reference/imc22_sdk/imc22_cim.c:87-142): explode to
@@ -1936,22 +1881,7 @@ object QueryInventory {
       |FROM n a JOIN n b ON a.vec_id < b.vec_id
       |ORDER BY cosine DESC NULLS LAST, vec_a NULLS FIRST, vec_b NULLS FIRST
       |LIMIT 10""".stripMargin),
-    "vector,cosine,similarity",
-    impl = Some { (spark, dir) =>
-      import org.apache.spark.sql.functions._
-      import graft.functions.VectorFunctions.{vecDot, vecL2}
-      graft.Tables.register(spark, dir)
-      val n = spark.table("embeddings").filter(col("vec_id") < 100)
-        .select(col("vec_id"), col("embedding").as("e"), vecL2(col("embedding")).as("nrm"))
-      val a = n.select(col("vec_id").as("vec_a"), col("e").as("ea"), col("nrm").as("na"))
-      val b = n.select(col("vec_id").as("vec_b"), col("e").as("eb"), col("nrm").as("nb"))
-      a.join(b, col("vec_a") < col("vec_b"))
-        .select(col("vec_a"), col("vec_b"),
-          round(vecDot(col("ea"), col("eb")) / (col("na") * col("nb")), 4).as("cosine"))
-        .orderBy(col("cosine").desc_nulls_last,
-          col("vec_a").asc_nulls_first, col("vec_b").asc_nulls_first)
-        .limit(10)
-    })
+    "vector,cosine,similarity")
 
   /** Numerically-stable softmax (reference
     * /root/reference/firmware/middleware/cascade_model.c:203-229)
@@ -2625,6 +2555,7 @@ object QueryInventory {
       |ORDER BY doc_id NULLS FIRST, rep_frac NULLS FIRST, uniq_bigrams NULLS FIRST,
       |         n_bigrams NULLS FIRST""".stripMargin),
     "repetition,quality,llm",
+    // Measured win: impl/SQL median 0.43, 12/12 pairs at sf0.1; 0.56, 12/12 at 10×.
     // Scale path: the one-pass RepetitionStatsExpr kernel turns the
     // explode→groupBy→groupBy spelling into a shuffle-free projection
     // (same arithmetic: (rep_cnt * 1.0) / n — parity spec in
@@ -2727,22 +2658,7 @@ object QueryInventory {
       |WHERE d.doc_id <> 0
       |ORDER BY cos_score DESC NULLS LAST, doc_id NULLS FIRST, lang NULLS FIRST
       |LIMIT 15""".stripMargin),
-    "similarity,search",
-    impl = Some { (spark, dir) =>
-      import org.apache.spark.sql.functions._
-      import graft.functions.VectorFunctions.vecDot
-      graft.Tables.register(spark, dir)
-      val e = spark.table("embeddings")
-      val p = e.filter(col("vec_id") === 0).select(col("embedding").as("p"))
-      spark.table("documents").filter(col("doc_id") =!= 0)
-        .join(e, col("doc_id") === col("vec_id"))
-        .crossJoin(p)
-        .select(col("doc_id"), col("lang"),
-          round(vecDot(col("embedding"), col("p")), 4).as("cos_score"))
-        .orderBy(col("cos_score").desc_nulls_last,
-          col("doc_id").asc_nulls_first, col("lang").asc_nulls_first)
-        .limit(15)
-    })
+    "similarity,search")
 
   /** Lexicon sentiment scoring per source (the retrieved EDBT'16
     * "Large Scale Sentiment Analysis with Spark" analog, PAPERS.md):
@@ -2769,6 +2685,7 @@ object QueryInventory {
       |GROUP BY source
       |ORDER BY source NULLS FIRST, n_docs NULLS FIRST, avg_sentiment NULLS FIRST""".stripMargin),
     "sentiment,lexicon,text",
+    // Measured win: impl/SQL median 0.50, 12/12 pairs at sf0.1; 0.36, 12/12 at 10×.
     impl = Some { (spark, dir) =>
       import org.apache.spark.sql.functions._
       graft.Tables.register(spark, dir)
@@ -3809,6 +3726,7 @@ object QueryInventory {
       |                         OR b.p_retailprice < a.p_retailprice))
       |ORDER BY p_partkey NULLS FIRST, p_size NULLS FIRST, price NULLS FIRST""".stripMargin),
     "skyline,pareto,dominance",
+    // Measured win: impl/SQL median 0.79, 12/12 pairs at sf0.1; 0.75, 11/12 at 10×.
     impl = Some { (spark, dir) =>
       import org.apache.spark.sql.functions._
       graft.Tables.register(spark, dir)

@@ -132,10 +132,10 @@ object ScaleBench {
     // engine-vs-baseline where they actually differ: the contract
     // queries run verbatim through spark.sql (engine == baseline by
     // construction), so the only entries with a distinct baseline are
-    // the 9 library-operator impl overrides — time impl vs the plain
-    // spark.sql spelling at sf1 (min-of-2 interleaved, same defense).
-    // The budget is impl <= 2x SQL; overrides exist to WIN at scale
-    // (skyline, range/interval joins), so most ratios sit below 1.
+    // the Q.impl overrides — time impl vs the plain spark.sql spelling
+    // at sf1 (min-of-2 interleaved, same defense). The budget is
+    // impl <= 2x SQL; an override stays only with a measured win or a
+    // size gate (Q.impl), so most ratios sit below 1.
     // A subset run (SPARK_GRAFT_SCALE_ONLY) measures impl-vs-SQL only
     // for overridden queries IN the subset — that's how one drifting
     // override (r8: qj16) gets a targeted gate-clean re-measure

@@ -29,8 +29,10 @@ import org.apache.spark.sql.DataFrame
 object Checkpoints {
 
   /** Truncate `df`'s lineage, eagerly unless `eager = false` (then the
-    * first action over the result materializes it). */
+    * first job over the result materializes it, with no job of its
+    * own under either setting: see `graftshim.FirstUseCheckpoint`). */
   def truncate(df: DataFrame, eager: Boolean = true): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager)
-    else df.localCheckpoint(eager)
+    if (df.sparkSession.sparkContext.getCheckpointDir.isEmpty) df.localCheckpoint(eager)
+    else if (eager) df.checkpoint()
+    else org.apache.spark.sql.graftshim.FirstUseCheckpoint(df)
 }

@@ -1,11 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graftshim.CheckpointDirs
+import org.apache.spark.sql.graftshim.{BusDrain, CheckpointDirs}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The one checkpoint policy (`operators.Checkpoints`): with the
@@ -65,6 +67,59 @@ class CheckpointPolicySpec extends AnyFunSuite {
 
   test("eng_transformer_block's lazy checkpoint is reliable under a checkpoint dir") {
     assertReliable()(engine("eng_transformer_block"))
+  }
+
+  /** Jobs one checksum of `entry` starts, counted as `JobCount` does:
+    * a listener, read after the bus has drained. Only jobs carrying
+    * this spec's local property count (AQE stage jobs inherit it). */
+  private def jobsOf(entry: SparkSession => DataFrame): Int = {
+    val sc = spark.sparkContext
+    val tag = "graft.checkpointPolicySpec"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty(tag) != null) jobs.incrementAndGet()
+    }
+    BusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, "1")
+    try {
+      Goldens.checksum(entry(spark))
+      BusDrain.drain(sc)
+      jobs.get
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("eng_transformer_block runs the same jobs with and without a checkpoint dir") {
+    val sc = spark.sparkContext
+    val entry = engine("eng_transformer_block") _
+    jobsOf(entry) // warm
+    val local = jobsOf(entry)
+    val dir = Files.createTempDirectory("graft_ckpt_jobs")
+    try {
+      val reliable = CheckpointDirs.withCheckpointDir(sc, dir.toString)(jobsOf(entry))
+      assert(local > 0)
+      assert(reliable == local, s"$reliable jobs with a checkpoint dir, $local without")
+      assert(rddDirs(dir) > 0)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
+
+  test("a lazy reliable checkpoint that its first job reads in part is written whole") {
+    val sc = spark.sparkContext
+    val dir = Files.createTempDirectory("graft_ckpt_partial")
+    try CheckpointDirs.withCheckpointDir(sc, dir.toString) {
+      val df = operators.Checkpoints.truncate(spark.range(0, 1000, 1, 4).toDF("id"), eager = false)
+      assert(df.limit(1).collect().length == 1) // a job over the first partition only
+      val walk = Files.walk(dir)
+      val parts = try walk.iterator().asScala.count(_.getFileName.toString.startsWith("part-"))
+        finally walk.close()
+      assert(parts == 4)
+      assert(df.selectExpr("sum(id)").head().getLong(0) == 499500L)
+      java.lang.ref.Reference.reachabilityFence(df)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 
   test("qa19_mad_outliers (impl) checkpoints reliably under a checkpoint dir") {

@@ -36,6 +36,12 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val direct = emb.selectExpr("vec_dot_fast(embedding, embedding) AS d")
     assert(df.collect().map(_.getDouble(0)).toSeq ==
       direct.collect().map(_.getDouble(0)).toSeq)
+    // these contract queries have no impl: the rule alone gives their
+    // declared SQL the kernel
+    for (q <- Seq(QueryInventory.qv2, QueryInventory.qv4, QueryInventory.ql4)) {
+      val plan = spark.sql(q.sparkSql).queryExecution.optimizedPlan.toString
+      assert(plan.contains("vec_dot_fast"), s"${q.name} lost the dot kernel:\n$plan")
+    }
   }
 
   test("rewrite preserves golden values and null semantics") {
