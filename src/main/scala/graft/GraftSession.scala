@@ -19,9 +19,9 @@ import org.apache.spark.sql.SparkSession
   *  - a generated-code cache that holds the whole inventory's working
   *    set ([[CodegenCacheEntries]]);
   *  - the engine's extensions ([[graft.plans.GraftExtensions]]),
-  *    among them the single-partition route for small join-free
-  *    queries ([[graft.plans.SmallQueryRoute]]), whose size gate is
-  *    the advisory partition size below;
+  *    among them the one-task route for small join-free queries
+  *    ([[graft.plans.SmallQueryRoute]]: one job, no shuffle), whose
+  *    size gate is the advisory partition size below;
   *  - a `file:` filesystem that does not fork
   *    ([[graft.sources.NoForkLocalFileSystem]] and its `FileContext`
   *    twin [[graft.sources.NoForkLocalFs]]). Without libhadoop,

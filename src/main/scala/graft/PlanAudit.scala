@@ -63,10 +63,23 @@ object PlanAudit {
     "eng_semantic_dedup" ->
       "SemDeDup cluster-then-dedup: the per-row cell assignment is ONE cell_assign kernel call (codebook as a plan reference object — no k*dim literal unrolling in the plan, no janino breach at k=4096), the within-cell pair join shuffles ONCE on the learned cell id (cells ~64 members since k scales with the corpus — pair work linear in n, cross-cell pairs never form), and the survivor drop is a LEFT ANTI join on the id. The assignment is computed once and shared (checkpointed) by the pair join and both censuses. Measured curve at one HEAD: 10x data -> 1.26x, 50x -> 2.60x, 132x (k at the 4096 cap) -> 4.34x (BENCH_SCALE_semdedup*.json).")
 
+  /** Drops from a plan dump what changes with session history, code
+    * lines or the process, so that regenerating PLANS.md in a new JVM
+    * rewrites only the plans that changed. */
+  private def scrub(plan: String): String = plan
+    .replaceAll("#\\d+", "#N") // expression and subquery ids
+    .replaceAll("plan_id=\\d+", "plan_id=N")
+    .replaceAll("RDD\\[\\d+\\]", "RDD")
+    .replaceAll(" at [\\w$]+\\.scala:\\d+", "") // RDD call sites
+    .replaceAll("graft_metastore_\\d+-warehouse", "graft_metastore-warehouse")
+    .replaceAll("(graft_\\w+?)-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "$1-UUID") // scratch dirs
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark: SparkSession = GraftSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    // the shuffle partition count follows the core count and shows in
+    // every exchange, so the audit pins it rather than reading the host's
+    val spark: SparkSession = GraftSession.create("8")
     Tables.register(spark, sfDir)
     sources.BucketedTables.ensureFacts(spark, sfDir)
     val fns = SparkEntry.queries
@@ -81,10 +94,7 @@ object PlanAudit {
           org.apache.spark.sql.execution.FormattedMode)
         finally if (noBroadcast)
           spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      // scrub the per-PID tmp-metastore path so regenerating the file
-      // in a new session doesn't churn every Location line
-      val stable = plan.replaceAll("graft_metastore_\\d+-warehouse", "graft_metastore-warehouse")
-      s"## $name\n\n$note\n\n```\n${stable.trim.take(6000)}\n```\n"
+      s"## $name\n\n$note\n\n```\n${scrub(plan).trim.take(6000)}\n```\n"
     }.mkString("\n")
 
     val header =
@@ -94,6 +104,13 @@ object PlanAudit {
          |the property the plan must exhibit at 100 TB; the matching
          |machine assertions live in InventorySpec / BucketedTablesSpec /
          |LayoutSpec / GraftExtensionsSpec.
+         |
+         |Each plan is prepared outside any SQL execution, so the
+         |one-task route for small queries (`plans.SmallQueryRoute`) never
+         |shows here: a section shows the fallback plan that the query
+         |gets when its result goes to a file. Expression ids,
+         |`plan_id`s, RDD ids, RDD call sites and scratch-directory names
+         |are scrubbed, so the file is the same from run to run.
          |""".stripMargin
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), header + "\n" + body)
     println(s"[planaudit] wrote ${audited.size} plans to $out")

@@ -17,10 +17,10 @@ import graft.expressions.{VecAggExpr, VecDotExpr}
   *
   * [[SmallQueryRoute]] is the one physical rule: an AQE query-stage
   * preparation rule that plans a small, join-free, layout-blind query
-  * whose result goes to the client or the noop sink as a
-  * single-partition plan (no hash shuffles to coalesce, no
-  * range-sampling job under its ORDER BY). Its guards and its size gate
-  * are documented there. */
+  * whose result goes to the client or the noop sink as one task: its
+  * shuffles become one `CoalesceExec(1)`, so the query runs one job
+  * with no exchange, no AQE re-plan and no range-sampling job under its
+  * ORDER BY. Its guards and its size gate are documented there. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => VecDotRewrite)

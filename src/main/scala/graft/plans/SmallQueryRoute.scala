@@ -3,7 +3,6 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{Command, V2WriteCommand}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
-import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.read.SupportsReportStatistics
 import org.apache.spark.sql.execution._
@@ -15,20 +14,31 @@ import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** AQE query-stage preparation rule: a small query runs as a
-  * single-partition plan.
+/** AQE query-stage preparation rule: a small query runs as one task.
   *
   * When a query's whole input fits in one advisory partition
   * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`: 1 MB on a local
   * master, Spark's 64 MB on a cluster), size-first AQE coalescing
   * already reduces every shuffle of it to one reducer, but each shuffle
-  * still costs a Spark job, and a global ORDER BY one more job that
-  * samples its input for range bounds. This rule plans that outcome up
-  * front: every
-  * `ENSURE_REQUIREMENTS` shuffle becomes a `SinglePartition` shuffle,
-  * and one whose input is already a single partition is dropped, so
-  * the sorts, windows and final aggregates above the first shuffle run
-  * in its one reducer task with no further stage.
+  * still costs a map stage, a Spark job and an AQE re-plan between the
+  * stages, and a global ORDER BY one more job that samples its input
+  * for range bounds. This rule plans that outcome up front: every
+  * `ENSURE_REQUIREMENTS` shuffle over a multi-partition input becomes a
+  * `CoalesceExec(1)`, and one whose input is already a single partition
+  * is dropped. `CoalesceExec(1)` reports `SinglePartition`, which meets
+  * every distribution above it, so the shuffles above the first one
+  * drop out too: the routed plan has no exchange and runs as one stage,
+  * one job and one task.
+  *
+  * The price is the map side: the scan, filters, partial aggregates and
+  * explodes below the coalesce run in that one task, not one task per
+  * file split. The size gate bounds it to one advisory partition of
+  * input (1 MB local, 64 MB on a cluster). On an empty input Spark's
+  * coalesce still yields one empty partition, so a global aggregate
+  * keeps its one row. Spark sets, not adds, a DSv2 reader's custom
+  * metrics on its task's copy, so a connector whose readers report
+  * per-split counts shows only the last split of a coalesced scan;
+  * `sources.GraftLogSource`'s readers report the task's running total.
   *
   * Input size is the file bytes of the plan's file scans, the row bytes
   * of local relations and the runtime bytes of its materialized query
@@ -123,6 +133,6 @@ object SmallQueryRoute {
   private def singlePartition(plan: SparkPlan): SparkPlan = plan.transformUp {
     case s: ShuffleExchangeExec if s.shuffleOrigin == ENSURE_REQUIREMENTS =>
       if (s.child.outputPartitioning.numPartitions == 1) s.child
-      else s.copy(outputPartitioning = SinglePartition)
+      else CoalesceExec(1, s.child)
   }
 }

@@ -2994,15 +2994,23 @@ private[sources] case class GlogPartition(file: String,
 private[sources] class GlogReaderFactory(fields: Array[String],
     limit: Int, topN: Option[(String, Boolean, Int)], confS: SerializableConf)
     extends PartitionReaderFactory {
+  /** Rows this scan's readers have reported in the running task. Spark
+    * sets, not adds, a reader's custom metric on the task's copy, so a
+    * task that reads several splits (a coalesced scan) must report its
+    * running total, or only its last reader's rows would count. A task
+    * deserializes its own factory, so the total is per task and scan. */
+  @transient private lazy val taskRows = new java.util.concurrent.atomic.AtomicLong
+
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[GlogPartition]
-    new GlogReader(p.file, fields, p.filters, limit, topN, confS)
+    new GlogReader(p.file, fields, p.filters, limit, topN, confS, taskRows)
   }
 }
 
 private[sources] class GlogReader(file: String, fields: Array[String],
     pushed: Array[Filter], limit: Int,
-    topN: Option[(String, Boolean, Int)], confS: SerializableConf)
+    topN: Option[(String, Boolean, Int)], confS: SerializableConf,
+    taskRows: java.util.concurrent.atomic.AtomicLong)
     extends PartitionReader[InternalRow] {
 
   private val filePath = new Path(file)
@@ -3012,6 +3020,7 @@ private[sources] class GlogReader(file: String, fields: Array[String],
   private val fileNameUtf8 = UTF8String.fromString(filePath.getName)
   private var current: InternalRow = _
   private var emitted = 0L
+  private var reported = 0L
 
   // hot-loop plan, computed ONCE per split: which source columns to
   // actually parse (projection ∪ pushed-filter references — column
@@ -3190,7 +3199,8 @@ private[sources] class GlogReader(file: String, fields: Array[String],
   override def close(): Unit = in.close()
 
   override def currentMetricsValues(): Array[CustomTaskMetric] = {
-    val n = emitted
+    val n = taskRows.addAndGet(emitted - reported)
+    reported = emitted
     Array(new CustomTaskMetric {
       override def name(): String = "rowsEmitted"
       override def value(): Long = n

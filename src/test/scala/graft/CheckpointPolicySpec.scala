@@ -1,13 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graftshim.{BusDrain, CheckpointDirs}
+import org.apache.spark.sql.graftshim.CheckpointDirs
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The one checkpoint policy (`operators.Checkpoints`): with the
@@ -69,29 +67,9 @@ class CheckpointPolicySpec extends AnyFunSuite {
     assertReliable()(engine("eng_transformer_block"))
   }
 
-  /** Jobs one checksum of `entry` starts, counted as `JobCount` does:
-    * a listener, read after the bus has drained. Only jobs carrying
-    * this spec's local property count (AQE stage jobs inherit it). */
-  private def jobsOf(entry: SparkSession => DataFrame): Int = {
-    val sc = spark.sparkContext
-    val tag = "graft.checkpointPolicySpec"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null && j.properties.getProperty(tag) != null) jobs.incrementAndGet()
-    }
-    BusDrain.drain(sc)
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(tag, "1")
-    try {
-      Goldens.checksum(entry(spark))
-      BusDrain.drain(sc)
-      jobs.get
-    } finally {
-      sc.setLocalProperty(tag, null)
-      sc.removeSparkListener(listener)
-    }
-  }
+  /** Jobs one checksum of `entry` starts. */
+  private def jobsOf(entry: SparkSession => DataFrame): Int =
+    TestSpark.jobsOf(Goldens.checksum(entry(spark)))
 
   test("eng_transformer_block runs the same jobs with and without a checkpoint dir") {
     val sc = spark.sparkContext

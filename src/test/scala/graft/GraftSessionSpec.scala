@@ -30,7 +30,7 @@ class GraftSessionSpec extends AnyFunSuite {
     val dir = s"${TestSpark.testData}/sf0.01"
     Tables.register(s, dir)
     def compilations(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    // each query with the single-partition route and without it (advisory
+    // each query with the small-query route and without it (advisory
     // size 1 byte), which together generate more classes than Spark's
     // default 100-entry cache keeps
     val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"

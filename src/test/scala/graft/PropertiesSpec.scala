@@ -251,4 +251,75 @@ class PropertiesSpec extends AnyFunSuite {
       assert(vals.forall(v => v >= mn && v <= mx), f.getName)
     }
   }
+
+  test("property: small queries return the same rows with the small-query route on and off") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    // duplicate keys, nulls and one heavy key; `id` is unique, so every
+    // window and the global sort have a total order
+    val keyGen: Gen[Option[Int]] = Gen.frequency(
+      4 -> Gen.const(Some(7)), 4 -> Gen.chooseNum(0, 5).map(Some(_)), 1 -> Gen.const(None))
+    val rowGen = for {
+      k <- keyGen
+      g <- Gen.option(Gen.oneOf("a", "b", "c"))
+      x <- Gen.option(Gen.chooseNum(-1000L, 1000L))
+      ts <- Gen.chooseNum(0L, 20L)
+    } yield (k, g, x, ts)
+    // 0 files (an empty directory read with the schema), 1 file or several
+    val inputGen = for {
+      files <- Gen.oneOf(0, 1, 1, 3, 5)
+      n <- if (files == 0) Gen.const(0) else Gen.chooseNum(files, 80)
+      rows <- Gen.listOfN(n, rowGen)
+    } yield (files, rows)
+    val schema = StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("k", IntegerType), StructField("g", StringType),
+      StructField("x", LongType), StructField("ts", LongType, nullable = false)))
+    val queries = Seq(
+      "SELECT k, count(*), sum(x), min(g), max(x), count(DISTINCT g) FROM t GROUP BY k",
+      "SELECT k, g, count(*), sum(x), grouping_id() FROM t GROUP BY ROLLUP(k, g)",
+      "SELECT k, g, count(x), max(ts) FROM t GROUP BY GROUPING SETS ((k), (g), ())",
+      "SELECT DISTINCT k, g FROM t",
+      """SELECT id, k, sum(x) OVER (PARTITION BY k ORDER BY ts, id),
+        |  row_number() OVER (PARTITION BY k ORDER BY ts, id),
+        |  lag(g) OVER (PARTITION BY g ORDER BY id) FROM t""".stripMargin,
+      "SELECT id, k, x FROM t ORDER BY x NULLS FIRST, ts DESC, id",
+      // the as-of shape of qj10: a UNION ALL under a running window
+      """SELECT k, id, side, last_value(x, true) OVER (PARTITION BY k ORDER BY ts, side, id
+        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS asof
+        |FROM (SELECT k, id, ts, 1 AS side, CAST(NULL AS BIGINT) AS x FROM t
+        |      UNION ALL SELECT k, id, ts, 0 AS side, x FROM t WHERE x IS NOT NULL)""".stripMargin)
+    def routed(df: org.apache.spark.sql.DataFrame): Boolean = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => TestSpark.exchanges(a).isEmpty
+      case _ => false
+    }
+    samples(inputGen, 10).zipWithIndex.foreach { case ((files, rows), i) =>
+      val dir = java.nio.file.Files.createTempDirectory("graft_route_prop").toFile
+      try {
+        val data = rows.zipWithIndex.map { case ((k, g, x, ts), id) =>
+          Row(id.toLong, k.map(Int.box).orNull, g.orNull, x.map(Long.box).orNull, ts) }
+        if (files > 0)
+          spark.createDataFrame(java.util.Arrays.asList(data: _*), schema).repartition(files)
+            .write.mode("overwrite").parquet(dir.getPath)
+        spark.read.schema(schema).parquet(dir.getPath).createOrReplaceTempView("t")
+        queries.foreach { sql =>
+          val (on, onRouted) =
+            TestSpark.withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64m") {
+              val df = spark.sql(sql)
+              (df.collect().map(_.toString).toSeq, routed(df))
+            }
+          assert(onRouted, s"route did not apply to sample $i ($files files, ${rows.size} rows): $sql")
+          // coalescing off is the one gate that also turns the route off
+          // for an empty input
+          val off = TestSpark.withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false")(
+            spark.sql(sql).collect().map(_.toString).toSeq)
+          assert(on.sorted == off.sorted, s"sample $i ($files files, ${rows.size} rows): $sql")
+          if (sql.contains("ORDER BY x")) assert(on == off, s"sample $i: sort order")
+        }
+      } finally {
+        spark.catalog.dropTempView("t")
+        org.apache.commons.io.FileUtils.deleteQuietly(dir)
+      }
+    }
+  }
 }

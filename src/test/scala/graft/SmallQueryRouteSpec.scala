@@ -5,10 +5,9 @@ import java.io.File
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.BusDrain
 import org.apache.spark.sql.internal.SQLConf
@@ -18,25 +17,21 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.plans.SmallQueryRoute
 import graft.sources.BucketedTables
 
-/** The single-partition route for small queries
+/** The one-task route for small queries
   * ([[graft.plans.SmallQueryRoute]]) must give the same answer as its
   * fallback on every query it accepts, and must leave alone every plan
   * whose partition layout someone can observe.
   *
-  * The fallback is reached two ways: the advisory partition size set to
-  * 1 byte (no non-empty input fits, so the route never applies), or a
+  * The fallback is reached three ways: the advisory partition size set
+  * to 1 byte (no non-empty input fits, so the route never applies), AQE
+  * partition coalescing off (the only switch for an empty input), or a
   * plan run through `DataFrame.rdd`, which AQE prepares outside any SQL
   * execution, where the route cannot see the sink and keeps the plan. */
 class SmallQueryRouteSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-  import TestSpark.testData
+  import TestSpark.{exchanges, jobsOf, testData, withConf}
   private val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
 
-  private def withConf[A](kv: (String, String)*)(f: => A): A = {
-    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
   private def routeOff[A](f: => A): A = withConf(advisory -> "1")(f)
   /** AQE keeps every reducer even of a tiny shuffle, so a layout change
     * by the route would show in partition ids and file counts. */
@@ -45,21 +40,10 @@ class SmallQueryRouteSpec extends AnyFunSuite {
     "spark.sql.adaptive.coalescePartitions.minPartitionNum" -> "1000",
     "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1")(f)
 
-  /** Every shuffle of an executed plan, stages included. */
-  private def shuffles(plan: SparkPlan): Seq[ShuffleExchangeLike] = {
-    def flat(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => flat(a.executedPlan)
-      case q: QueryStageExec => flat(q.plan)
-      case r: ReusedExchangeExec => flat(r.child)
-      case other => other.children.flatMap(flat)
-    })
-    flat(plan).collect { case s: ShuffleExchangeLike => s }
-  }
-  private def layout(plan: SparkPlan): Seq[String] = shuffles(plan)
-    .map(s => s"${s.outputPartitioning.getClass.getSimpleName}/${s.outputPartitioning.numPartitions}")
+  private def layout(plan: SparkPlan): Seq[String] = exchanges(plan)
+    .collect { case s: ShuffleExchangeLike => s.outputPartitioning }
+    .map(p => s"${p.getClass.getSimpleName}/${p.numPartitions}")
     .sorted
-  private def singlePartition(plan: SparkPlan): Boolean =
-    shuffles(plan).forall(_.outputPartitioning == SinglePartition)
 
   /** The executed plan of the last SQL execution `f` runs: a write runs
     * its own execution, not the frame's. */
@@ -109,15 +93,42 @@ class SmallQueryRouteSpec extends AnyFunSuite {
       assert(drift.isEmpty, s"route changed the result of: $drift")
     }
 
-  test("accepted queries run with single-partition shuffles only and no range sampling") {
+  test("accepted queries plan no exchange and run one job") {
     val dir = s"$testData/sf0.01"
     Tables.register(spark, dir)
     TestSpark.interactiveQueries.foreach { n =>
-      val on = executed(noop(SparkEntry.queries(n)(spark, dir)))
-      val off = routeOff(executed(noop(SparkEntry.queries(n)(spark, dir))))
-      assert(singlePartition(on), s"$n: ${layout(on)}")
-      assert(!singlePartition(off), s"$n: ${layout(off)}")
+      def q() = SparkEntry.queries(n)(spark, dir)
+      val on = executed(noop(q()))
+      assert(exchanges(on).isEmpty, s"$n: ${layout(on)}")
+      // building these frames runs no job, so every job counted is the write's
+      assert(jobsOf(noop(q())) == 1, n)
+      val off = routeOff(jobsOf(noop(q())))
+      assert(off >= 2, s"$n: $off jobs with the route off")
     }
+  }
+
+  test("empty inputs keep their row") {
+    // a global aggregate answers one row even over no input; the
+    // coalesce must hand it one (empty) partition
+    def total(df: DataFrame) = df.agg(count(lit(1)).as("n"), sum(col("x")).as("s"))
+    def both(q: () => DataFrame, off: (=> Seq[String]) => Seq[String]): Unit = {
+      val df = q()
+      val on = df.collect().map(_.toString).toSeq
+      assert(exchanges(df.queryExecution.executedPlan).isEmpty, "route did not apply")
+      assert(on == Seq("[0,null]"))
+      assert(off(q().collect().map(_.toString).toSeq) == on)
+    }
+    val empty = java.nio.file.Files.createTempDirectory("graft_route_empty").toFile
+    try {
+      // a zero-byte input fits even a 1-byte advisory size; coalescing
+      // off is the route's other gate
+      both(() => total(spark.read.schema("x BIGINT").parquet(empty.getPath)),
+        withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false")(_))
+    } finally empty.delete(): Unit
+    val dir = s"$testData/sf0.001"
+    Tables.register(spark, dir)
+    both(() => total(spark.table("lineitem").where(col("l_quantity") < 0)
+      .select(col("l_orderkey").as("x"))), routeOff(_))
   }
 
   test("a small orderBy written to parquet keeps its file count") {
@@ -130,11 +141,11 @@ class SmallQueryRouteSpec extends AnyFunSuite {
     try parallelReducers {
       val written = executed(q().write.parquet(new File(out, "on").getPath))
       routeOff(q().write.parquet(new File(out, "off").getPath))
-      assert(!singlePartition(written), layout(written))
+      assert(exchanges(written).nonEmpty, layout(written))
       assert(parts("on") == parts("off") && parts("on") > 1, (parts("on"), parts("off")))
       // the same frame to the noop sink is routed: the guard is the sink
       val toNoop = executed(noop(q()))
-      assert(singlePartition(toNoop), layout(toNoop))
+      assert(exchanges(toNoop).isEmpty, layout(toNoop))
     } finally {
       def rm(f: File): Unit = { Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); () }
       rm(out)
